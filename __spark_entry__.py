@@ -18,185 +18,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Family weight for never-verified entries: the LLM-pipeline operator
-# families (dedup / similarity / text / multimodal / pipeline /
-# streaming / python-datasource) outrank generic SQL-surface entries
-# so they reach the driver's CORRECTNESS window first.
-_FAMILY_WEIGHT = {
-    "d_": 0,
-    "s_": 1,
-    "t_": 2,
-    "p_": 3,
-    "m_": 4,
-    "st_": 5,
-}
-_NAMED_WEIGHT = {
-    "r_python_datasource_props": 6,
-    "r_pyparquet_sink_roundtrip": 6,
-    "q10_returned_items": 7,
-    "q14_promo_revenue": 7,
-    "q19_disjunctive_pred": 7,
-    "q_hash_mod_sample": 7,
-    "q_sessionization": 7,
-    "q_asof_join": 7,
-    # r3 promotions: first-class SURVEY 2.D rows still driver-unverified
-    # (VERDICT r2 task 4) — must land in the 50-entry window ahead of
-    # generic SQL-surface samplers.
-    "q_merge_upsert_snapshot": 8,
-    "q_cogroup_asof_align": 8,
-    "q_variant_semistructured": 8,
-    "q_profile_stats": 8,
-    "q_recursive_cte": 8,
-    "r_datasource_filter_pushdown": 8,
-    "st_foreachbatch_upsert": 8,
-    "q_pagerank_transitions": 8,
-    # r3: complete the partially-verified SURVEY components in one
-    # window — D9 (the 16 TPC-H shapes without a driver row yet), D14
-    # (event analytics beyond sessionization), D15 (stratified
-    # sampling), D19 (outlier filtering) — ahead of generic samplers.
-    **{
-        n: 9
-        for n in (
-            "q2_min_cost_supplier q4_order_priority q6_forecast_revenue "
-            "q7_volume_shipping q8_market_share q9_product_profit "
-            "q11_important_stock q12_shipping_priority_split "
-            "q13_customer_distribution q15_top_supplier "
-            "q16_parts_supplier_relationship q17_small_quantity_revenue "
-            "q18_large_volume_customers q20_excess_suppliers "
-            "q21_waiting_supplier q22_global_sales_opportunity "
-            "q_event_transitions q_cohort_retention q_funnel_analysis "
-            "q_stratified_sample q_outlier_zscore"
-        ).split()
-    },
-    # q_dq_checks / q_changelog_diff intentionally stay at default
-    # weight (r4): the r3 window is already full of must-haves (reds,
-    # the 16 TPC-H shapes, the promoted first-class ops).
-    # r3 demotions to make room (wait for r4): redundant with entries
-    # already green or already in the window (null-semantics / window
-    # -frame / set-op coverage overlap).
-    "q_cross_join_grid": 60,
-    "q_not_in_null_semantics": 60,
-    "q_window_value_frames": 60,
-    "q_union_by_name": 60,
-    "q_unpivot_measures": 60,
-}
-
-# Entries whose implementation or oracle changed THIS round (kept in
-# sync with the round's actual diff — see git log): green last round,
-# but the changed code must re-earn its row ahead of unchanged greens.
-# NOTE (pre-snapshot checklist): adding a @query entry ⇒ run
-# `python scripts/gen_readme_catalog.py` (it now also rewrites the
-# prose counts) — the README contract tests fail otherwise.
-# r9: the recall-curve invariant moved from approx-top-5 recall to the
-# mathematically monotone candidate-set hit count (ADVICE r8); the
-# SimHash fingerprint became a row-local zero-shuffle fold, so every
-# fingerprint consumer re-earns its row.
-# r14: EMPTY (VERDICT r13 task 3 — the stalest-first rotation fills
-# the 50-slot window with the 29 r9-vintage greens plus the 21 oldest
-# r10s, so no entry's latest green is older than r10 after r14;
-# verified by computing the window: Counter({9: 29, 10: 21})).
-# r15: EMPTY again (VERDICT r14 task 4 — the rotation fills the window
-# with the 25 r10-vintage greens plus the 25 oldest r11s; verified by
-# computing the window: Counter({10: 25, 11: 25}), so no entry's
-# latest green is older than r11 after r15).  This round's code
-# changes are again behavior-neutral for every catalog entry:
-# bench.py committed-vote selection + warm-pass era filtering +
-# warm-dir/warm-marker hardening + stdout-line render ladder +
-# five self-review fixes (all harness only, unit-tested without
-# Spark), the BENCH_HISTORY warm_pass/reps backfills (data
-# bookkeeping, values verified per vote commit), and README drift
-# adjudications + env-gate date bumps (docs).  No operator, oracle,
-# or query function changed.
-# r16: EMPTY a third time (VERDICT r15 task 3 — the rotation fills the
-# window with the 25 r11-vintage greens plus the 25 oldest r12s;
-# verified by computing the window: Counter({11: 25, 12: 25}), so no
-# entry's latest green is older than r12 after r16).  This round's
-# code changes are again behavior-neutral for every catalog entry:
-# bench.py measurement-trust work (seeded per-pass order shuffle,
-# per-vote code_hash + hash-verified calib-normalized cross-vote
-# downgrade, isolated-median side-car, vote-budget notice, stdout
-# truncation ladder fix — all harness-only, unit-tested without
-# Spark), a BENCH_HISTORY reps backfill on one pre-recording line
-# (data bookkeeping), and README/env-gate doc updates.  No operator,
-# oracle, or query function changed.
-# r17: EMPTY a fourth time (VERDICT r16 task 1 — the rotation fills
-# the window with the 25 r12-vintage greens plus the 25 oldest r13s;
-# verified by computing the window: Counter({12: 25, 13: 25}), so no
-# entry's latest green is older than r13 after r17 — post-r17
-# histogram r13:25 / r14:50 / r15:50 / r16:50 / r17:50).  This
-# round's code changes are again behavior-neutral for every catalog
-# entry: two ADVICE r16 bench.py fixes (unreadable-file code-hash
-# nonce, isolated-median numeric check — harness-only, unit-tested
-# without Spark), the scale-smoke pair-count envelope + broadcast
-# cleanup (tests only), and the standing env-gate date bumps.  No
-# operator, oracle, or query function changed.
-# r18: EMPTY a fifth time (VERDICT r17 task 1 — the rotation fills the
-# window with the 25 r13-vintage greens plus the 25 oldest r14s;
-# verified by computing the window: Counter({13: 25, 14: 25}), so no
-# entry's latest green is older than r14 after r18 — post-r18
-# histogram r14:25 / r15:50 / r16:50 / r17:50 / r18:50).  This round's
-# code changes are again behavior-neutral for every catalog entry: the
-# three ADVICE r17 harness fixes (code_hash unreadable-path surfacing
-# in bench.py, the pair-envelope empty-frame guard and the
-# trend-kind sec/counts split in the scale-smoke harness — all
-# unit-tested without Spark in tests/test_smoke_harness.py /
-# test_bench_drift.py), and the standing env-gate date bumps.  No
-# operator, oracle, or query function changed.
-# r19: EMPTY a sixth time (VERDICT r18 task 1 — the rotation fills the
-# window with the 25 r14-vintage greens plus the 25 oldest r15s;
-# verified by computing the window: Counter({14: 25, 15: 25}), so no
-# entry's latest green is older than r15 after r19 — post-r19
-# histogram r15:25 / r16:50 / r17:50 / r18:50 / r19:50).  This round's
-# code changes are again behavior-neutral for every catalog entry: the
-# three ADVICE r18 harness fixes (smoke-harness test imports made
-# local/appended rather than a module-scope repo-root prepend, the
-# malformed-trend-line skip-and-warn plus start-of-run truncation in
-# scripts/record_scale_smoke.py, and the widened driver-local kernel
-# k-linearity margin in tests/test_scale_smoke.py — all harness/tests
-# only, unit-tested without Spark), and the standing env-gate date
-# bumps.  No operator, oracle, or query function changed.
-# r20 (NOT empty — two entries changed this round, VERDICT r19 tasks
-# 1+3): `d_minhash_lsh_pairs` replaced the unconditional
-# `F.broadcast(cands)` hint on the verification join with a
-# row-count-guarded broadcast (≤4M pairs broadcast, else plain hash
-# join; a pure-AQE no-hint variant was bisected at ~1.3× isolated
-# median and rejected; shuffle path pinned by
-# tests/test_plans.py::test_minhash_verification_join_survives_no_broadcast)
-# and `q_correlated_scalar_subquery` lowered its multiplier 1.2 → 1.01
-# in BOTH the Spark SQL and the oracle (the old value matched nothing
-# at any test SF, so the r19 green hash-pinned an empty result).  Both
-# must re-earn their rows ahead of unchanged greens.
-# r20 OPTIMIZATION pass (same round, later session): the operator
-# restructures below are all result-identical (each A/B'd cell-for-cell
-# and oracle-checked at sf0.01 before commit), but every entry whose
-# computation path changed re-verifies ahead of unchanged greens:
-# - clustering.kmeans / kmeans_exact_quantized single-job reduce →
-#   s_kmeans_embeddings, s_kmeans_exact_replay, and the consumers
-#   d_semantic_dedup, d_semdedup_exact_replay, s_ann_ivf_recall,
-#   s_ivfpq_search, s_ivfpq_recall_curve, s_ivfpq_exact_replay;
-# - graph.pagerank pinned-leaf iteration / bfs_distances 1-job hops →
-#   q_pagerank_transitions, q_bfs_shortest_path;
-# - dedup.connected_components monotone-sum probe →
-#   d_connected_components, d_dedup_clusters, d_dedup_keep_best;
-# - scale.global_ntile_multi fusion → q_rfm_segmentation;
-# - scale.exact_percentiles lo/hi single-join → q_exact_pctl_histogram,
-#   q_median_impute.
-# r21 OPTIMIZATION round: the queue is REPLACED with this round's
-# touched computation paths (r20's queue did its job — all 18 entries
-# re-earned green rows in CORRECTNESS_r20):
-# - bpe.bpe_train merge-loop discipline (AQE-off loop, bounded reduce
-#   partitions, measured-coalesce pin, lazy in-loop pins) →
-#   t_bpe_merge_vocab, t_bpe_vocab_stats, t_bpe_encode;
-# - dedup.minhash guard probe over the persisted bucket frame →
-#   d_minhash_lsh_pairs and consumers d_dedup_clusters,
-#   d_dedup_keep_best;
-# - graph.bfs_distances terminal-fold skip (ADVICE r20) →
-#   q_bfs_shortest_path;
-# - s_ann_ivf_recall was restructured and REVERTED in-round (final
-#   code identical to r20 modulo docstring) — queued anyway since its
-#   query function was touched.
-# Window check: 8 re-verifies fit the 50-entry window with plenty of
-# room for the stalest-green rotation.
+# Entries whose implementation or oracle changed since their last green
+# row: they re-verify ahead of unchanged greens.  Keep this in sync with
+# the actual diff.  Adding a @query entry means running
+# `python scripts/gen_readme_catalog.py`; the README contract tests fail
+# otherwise.
 _REVERIFY: set[str] = {
     "t_bpe_merge_vocab",
     "t_bpe_vocab_stats",
@@ -265,13 +91,7 @@ def _driver_order(names: list[str]) -> list[str]:
             # instead of re-running the same prefix every round.
             rank = 99 if n in _REVERIFY else 100
         else:
-            rank = _NAMED_WEIGHT.get(
-                n,
-                next(
-                    (w for p, w in _FAMILY_WEIGHT.items() if n.startswith(p)),
-                    50,
-                ),
-            )
+            rank = 0  # never attempted: fill the window in catalog order
         return (rank, last_green.get(n, 0), catalog_pos[n])
 
     return sorted(names, key=key)

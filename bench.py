@@ -1,184 +1,210 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: times the headline entries at $SPARK_GRAFT_SF_DIR
+on local[$SPARK_GRAFT_CPUS] and reports only what this run measured.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: median sec, ...}, "sf": <sf>}
+Usage:
+  python bench.py
 
-Each query runs SPARK_GRAFT_BENCH_REPS times (default 3) and reports
-the per-query MEDIAN — single-run numbers cannot certify a 2× gate
-when the VM-boot environmental spread is ~1.7× and first runs carry
-one-off Janino codegen / JIT costs (measured ~4s on the 64-perm
-minhash agg).  queries_spread carries [min, max] so a noisy rep is
-visible rather than silently folded in.
+Environment (the only two options):
+  SPARK_GRAFT_SF_DIR  input dataset directory, named ``sf<N>``
+                      (default ``DEFAULT_SF_DIR``)
+  SPARK_GRAFT_CPUS    core count for local[N]; default: the cores this
+                      process may run on.  Must be a positive integer.
 
-Rep layout (VERDICT r12 task 1): reps run as PASS-INTERLEAVED full
-passes over the whole query list — pass 1 runs every query once, then
-pass 2, … — NOT as back-to-back reps per query.  Both committed-run
-anomalies (r11 dedup 1.4-1.5×, r12 tpch 1.7×) had the same root
-cause: contiguous per-query reps put all of a family's samples inside
-ONE wall-clock window, so a transient host slowdown lands coherently
-on one family and reads as a regression.  With interleaving each
-query's median samples N different wall-clock windows, and
-bench_detail.json's per_pass_family_sums show a slow interval as one
-slow PASS (every family elevated) instead of one slow FAMILY.
+The heap is a share of the host's available memory (perfbench's
+``heap_mb``), and every directory Spark writes lives in a temporary work
+directory outside the checkout, removed at exit.
 
-Within each pass the family order and within-family entry order are
-SEEDED-SHUFFLED (VERDICT r15 task 1): a fixed order put heavy entries
-in the same wall-clock position of every pass, so position-correlated
-drift survived the cross-pass median and manufactured recurring
-1.3-1.6× per-entry readings that isolate to ≤1.3× (r13 minhash, r14
-kmeans, r15 semantic_dedup/bpe).  Seed and executed order are
-recorded in bench_detail.json (pass_order_seed / pass_entry_order),
-and each entry's latest ISOLATED steady-state median from
-PROFILE_HISTORY.jsonl rides alongside the windowed median
-(queries_isolated_median) so neither is quoted without the other.
+Method:
+  1. page the input parquet files into the OS cache (untimed);
+  2. run every entry once at the sibling ``sf0.001`` directory (untimed),
+     so each entry's per-JVM codegen compile is paid before timing;
+  3. run ``REPS`` passes over all entries, each pass in a seeded
+     shuffled order so no entry sits in the same wall-clock slot of
+     every pass.  Every entry gets the same rep count.
 
-Query set: the generation-heavy flagship (the reference's core purpose),
-one query per operator family (agg/join/window/dedup/similarity/text),
-and a raw-generation throughput probe — so a regression in any family
-moves the headline number.
+Each timed rep builds the entry's frame and writes it to the ``noop``
+sink, which runs the whole plan (``count()`` lets Spark prune columns and
+aggregates).  An entry that raises is reported with its traceback and is
+not run again.
+
+Output: per-entry median, max and n on stderr, then one JSON line on
+stdout: ``metric``, ``value`` (sum of the medians in ``queries``),
+``unit``, ``queries``, ``sf``, ``cpus``, ``reps``, ``code_hash``,
+``attempted`` and ``failed``.  Exit status 1 when any entry failed.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import json
 import os
 import random
-import re
+import shutil
 import statistics
 import sys
+import tempfile
 import time
+import traceback
 
-PROBE_CLASSES = ("shuffle", "pyworker", "driver_loop")
+from perfbench.session import (
+    build_session,
+    heap_mb,
+    host_cores,
+    mem_available_mb,
+    stop_session,
+)
 
-# Probe classes PLAUSIBLE per family (ADVICE r12: attribution must not
-# credit a family slowdown to a cost class the family never exercises —
-# e.g. a pyworker spike must not environment-attribute a JVM-only tpch
-# regression).  Derived from the entries' actual execution paths:
-#   gen        — Catalyst exprs fast path (shuffle) + the pandas-UDF
-#                parity probe gen_pandas_udf_1m_rows (pyworker)
-#   tpch       — pure spark.sql over parquet; no Python worker, no
-#                driver loop: JVM shuffle/codegen ONLY
-#   events     — SQL/window ops (shuffle) + q_ewma_smoothing's grouped
-#                applyInPandas (pyworker)
-#   dedup      — Catalyst digest/fingerprint folds (shuffle), the
-#                embedding near-dup Arrow kernels via similarity.*
-#                (pyworker), and multi-job entries (snapshot_dedup's
-#                state write/read rounds, skew routing's heavy-key
-#                collect) whose r11 drift demonstrably moved with
-#                many-small-jobs host cost (driver_loop) — see the
-#                README drift block's r12 adjudication
-#   iterative  — driver-iterated rounds of keyed shuffles with Arrow
-#                combiner kernels: all three classes by construction
-#   similarity — Arrow/pandas ANN kernels (pyworker) + shuffled
-#                bucket joins (shuffle) + IVF/kmeans train loops
-#                (driver_loop)
-#   text       — functions/text.py is pure Catalyst (0 pandas_udf):
-#                shuffle ONLY
-FAM_COST_CLASSES = {
-    "gen": ("shuffle", "pyworker"),
-    "tpch": ("shuffle",),
-    "events": ("shuffle", "pyworker"),
-    "dedup": ("shuffle", "pyworker", "driver_loop"),
-    "iterative": ("shuffle", "pyworker", "driver_loop"),
-    "similarity": ("shuffle", "pyworker", "driver_loop"),
-    "text": ("shuffle",),
-    #   scaling    — pure-Catalyst xxhash64 chain, no Python, no driver
-    #                loop; its one 1-row exchange makes shuffle the
-    #                only plausible class (r21)
-    "scaling": ("shuffle",),
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+REPS = 3
+SHUFFLE_SEED = 16
+# The result is read from the last ~2000 chars of stdout.
+LINE_CAP = 1400
+
+# The headline set: the generation-heavy flagship, raw generation
+# throughput through both the Catalyst and the pandas-UDF paths, one or
+# more entries per operator family, and a compute-bound core-scaling
+# probe, so a regression in any family moves the total.
+HEADLINE = (
+    "flagship_randgen_graft",
+    "gen_expr_5m_rows",
+    "gen_pandas_udf_1m_rows",
+    "q1_pricing_summary",
+    "q3_topk_revenue",
+    "q5_regional_revenue",
+    "q_window_topk_per_group",
+    "q8_market_share",
+    "q_sessionization",
+    "q_asof_join",
+    "d_exact_dedup",
+    "d_minhash_lsh_pairs",
+    "d_connected_components",
+    "d_embedding_near_dup",
+    "s_ann_bruteforce_topk",
+    "s_ann_ivf_recall",
+    "t_token_stats",
+    "p_training_data_prep",
+    "q_pagerank_transitions",
+    "s_kmeans_embeddings",
+    "d_contamination_check",
+    "q_exact_pctl_histogram",
+    "q_sparse_matmul",
+    "q_bfs_shortest_path",
+    "q_ewma_smoothing",
+    "q_forward_fill_locf",
+    "q_median_impute",
+    "d_simhash_r6",
+    "t_dup_span_coverage",
+    "q_rfm_segmentation",
+    "d_winnowing_fingerprints",
+    "d_exact_substring_spans",
+    "d_semantic_dedup",
+    "d_snapshot_dedup",
+    "t_bpe_merge_vocab",
+    "d_skewed_digest_dedup",
+    "cpu_scaling_probe",
+)
+
+
+def gen_probe(spark, _sf_dir):
+    """Raw generation throughput: 5M rows × 4 randgen columns via the
+    pure-Catalyst fast path (the 100 TB generation shape)."""
+    from pyspark.sql import functions as F
+
+    from datafusion_randgen_spark.functions import exprs, seeded
+
+    cores = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 5_000_000, 1, cores).select(
+        exprs.int64_uniform_expr(F.lit(1), F.lit(1_000_000)).alias("a"),
+        exprs.float64_normal_expr(F.lit(0.0), F.lit(1.0)).alias("b"),
+        seeded.seeded_int64_uniform(F.col("id"), 1, 100, seed=1).alias("c"),
+        exprs.bool_bernoulli_expr(F.lit(0.5)).alias("d"),
+    )
+    return df.selectExpr(
+        "count(*) AS n", "min(a) AS lo", "max(a) AS hi", "avg(b) AS m"
+    )
+
+
+def gen_probe_pandas_udf(spark, _sf_dir):
+    """Parity pandas-UDF path at 1M rows (Arrow round-trip cost)."""
+    from datafusion_randgen_spark import add_udfs
+
+    add_udfs(spark)
+    return spark.sql(
+        "SELECT count(*) AS n, min(x) AS lo, max(x) AS hi FROM "
+        "(SELECT randgen_int64_uniform(1, 1000000) AS x FROM range(0, 1000000))"
+    )
+
+
+def cpu_scaling_probe(spark, _sf_dir):
+    """Compute-bound core-scaling probe: a fixed amount of
+    embarrassingly-parallel JVM codegen work — 64M rows × a 24-round
+    xxhash64 chain, partitioned 4× the session's cores, reduced map-side
+    to 64 groups.  Every other sf0.1 entry is bound by per-entry
+    overhead (~17 MB of data), so this is the one entry whose runtime is
+    expected to follow the core count.  Total work is the same at every
+    core count; only the partition count follows it.
+
+    The hash chain feeds the GROUP KEY (pmod 64), not an ungrouped
+    aggregate: Spark prunes a global aggregate's functions when only the
+    row count is read (measured under ``count()``: 0.31 s pruned vs
+    2.94 s computed at 8 cores).  With the chain in the key, even the
+    number of output rows depends on every hash."""
+    from pyspark.sql import functions as F
+
+    h = F.col("id")
+    for i in range(24):
+        h = F.xxhash64(h, F.lit(i))
+    cores = spark.sparkContext.defaultParallelism
+    return (
+        spark.range(0, 64_000_000, 1, cores * 4)
+        .groupBy(F.pmod(h, F.lit(64)).alias("g"))
+        .agg(F.count("*").alias("n"))
+    )
+
+
+PROBES = {
+    "gen_expr_5m_rows": gen_probe,
+    "gen_pandas_udf_1m_rows": gen_probe_pandas_udf,
+    "cpu_scaling_probe": cpu_scaling_probe,
 }
 
 
-def _round_of(path: str) -> int:
-    m = re.search(r"_r(\d+)\.json$", path)
-    return int(m.group(1)) if m else -1
+def entry_fn(name: str):
+    """The ``(spark, sf_dir) -> DataFrame`` builder of a headline entry."""
+    if name in PROBES:
+        return PROBES[name]
+    from datafusion_randgen_spark import queries as cat
+
+    if name == "flagship_randgen_graft":
+        return cat.flagship
+    return cat.QUERIES[name]
 
 
-def pick_prev_bench(repo_dir: str, cur_round: int, cur_sf):
-    """Latest strictly-earlier-round BENCH_r*.json whose parsed sf
-    matches cur_sf.
-
-    ADVICE r12: selecting by round number alone let a latest prev bench
-    at a DIFFERENT sf abort the whole drift comparison even when an
-    older same-sf file exists — walk newest→oldest and skip (recording)
-    sf-mismatched files instead.  Returns (parsed_prev, prev_round,
-    prev_path, skipped) with parsed_prev None when no candidate
-    qualifies."""
-    benches = sorted(
-        (p for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-         if 0 <= _round_of(p) < cur_round),
-        key=_round_of,
-    )
-    skipped: list[str] = []
-    for path in reversed(benches):
-        try:
-            with open(path) as fh:
-                prev = json.load(fh)
-        except (OSError, ValueError):
-            skipped.append(os.path.basename(path) + ":unreadable")
-            continue
-        parsed_prev = prev.get("parsed") or {}
-        if parsed_prev.get("sf") != cur_sf:
-            skipped.append(
-                f"{os.path.basename(path)}:sf={parsed_prev.get('sf')}"
-            )
-            continue
-        return parsed_prev, _round_of(path), path, skipped
-    return None, None, None, skipped
-
-
-def load_hist_runs(hist_path: str, prev_round: int, prev_sf) -> list[dict]:
-    """Every same-round same-sf BENCH_HISTORY.jsonl line (cross-run
-    median inputs; one bad line must not kill drift)."""
-    hist_runs: list[dict] = []
+def parse_cpus(value: str | None) -> int:
+    """Core count from ``$SPARK_GRAFT_CPUS``: the host's usable cores
+    when unset or empty, else a positive integer (ValueError otherwise)."""
+    if value is None or not value.strip():
+        return host_cores()
     try:
-        with open(hist_path) as fh:
-            for ln in fh:
-                try:
-                    ent = json.loads(ln)
-                except ValueError:
-                    continue
-                if (
-                    ent.get("round") == prev_round
-                    and ent.get("queries")
-                    and ent.get("sf") == prev_sf
-                ):
-                    hist_runs.append(ent)
-    except OSError:
-        pass
-    return hist_runs
+        cores = int(value)
+    except ValueError:
+        cores = 0
+    if cores < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {value!r}"
+        )
+    return cores
 
 
-def compute_code_hash(
-    repo_dir: str, unreadable: list[str] | None = None
-) -> str:
-    """12-hex sha256 over the package source + bench.py (ADVICE r15):
-    each BENCH_HISTORY vote records the code it ran, so the cross-vote
-    regression downgrade can require byte-identical code instead of
-    assuming it from round/sf/era equality.  bench.py is included
-    because the timing METHODOLOGY (rep layout, warm pass, probes)
-    shapes per-entry numbers as much as operator code does; a mid-round
-    harness edit must shrink the comparable vote pool, not silently
-    pollute it.  A file that exists but cannot be read makes the WHOLE
-    hash fail toward NOT matching (ADVICE r16): the unreadable slot is
-    salted with a per-call random nonce, so an unverifiable code
-    state never equals any other hash —
-    not the readable state, not a differently-broken state, not even a
-    second call on the same broken state.  Such a vote simply has no
-    same-code siblings and the strict filter excludes it.
-
-    The nonce makes the function CALL-ONCE per run: two calls on the
-    byte-identical broken state disagree by design, so any caller that
-    recomputed the hash to detect a mid-run edit would see a phantom
-    code change.  To keep the random hash diagnosable as an I/O
-    problem rather than an edit (ADVICE r17), each unreadable relpath
-    is warned to stderr and appended to ``unreadable`` when the caller
-    passes a list — run_bench records them in the vote itself."""
+def compute_code_hash(repo_dir: str) -> str:
+    """12-hex sha256 over the package sources and bench.py, so a printed
+    result names the code that produced it.  A source file that exists
+    but cannot be read salts the hash with a random nonce, so the hash
+    matches no other run (not even a second call on the same tree); each
+    such path is warned to stderr."""
     h = hashlib.sha256()
     paths = sorted(
         glob.glob(
@@ -187,1655 +213,216 @@ def compute_code_hash(
         )
     ) + [os.path.join(repo_dir, "bench.py")]
     for p in paths:
+        rel = os.path.relpath(p, repo_dir)
         try:
             with open(p, "rb") as fh:
                 data = fh.read()
         except OSError:
-            # unverifiable content must never vouch for a downgrade:
-            # the nonce alone guarantees this hash matches nothing,
-            # ever — not even itself across calls (code review r17:
-            # any further salt is unobservable inside the sha256)
             data = b"<unreadable>" + os.urandom(16)
-            rel = os.path.relpath(p, repo_dir)
             print(
                 f"[bench] WARNING: unreadable source {rel} — "
-                "code_hash salted, this vote matches no other",
+                "code_hash salted, it matches no other run",
                 file=sys.stderr,
             )
-            if unreadable is not None:
-                unreadable.append(rel)
-        h.update(os.path.relpath(p, repo_dir).encode())
+        h.update(rel.encode())
         h.update(b"\0")
         h.update(data)
         h.update(b"\0")
     return h.hexdigest()[:12]
 
 
-def shuffled_pass_order(
-    fams_in_pass, fam_groups, seed, pass_index
-) -> list[tuple[str, list[str]]]:
-    """Seeded per-pass shuffle of family order AND within-family entry
-    order (VERDICT r15 task 1).
-
-    With a FIXED pass order, heavy entries occupy the same wall-clock
-    position of every interleaved pass, so any time-structured host
-    drift (GC pressure building through a pass, a co-tenant burst)
-    lands on the same entries in every pass and survives the median —
-    the mechanism behind three consecutive rounds of 1.3-1.6x per-entry
-    readings that isolate to <=1.3x (r13 minhash, r14 kmeans/events,
-    r15 semantic_dedup/bpe).  Shuffling per pass decorrelates entry
-    from position, so position-correlated drift averages out of every
-    entry's median instead of compounding in a fixed victim set.
-
-    Deterministic for (seed, pass_index) — recorded in
-    bench_detail.json (``pass_order_seed``/``pass_entry_order``) so a
-    run is exactly reproducible.  Probe bracketing is unaffected: the
-    caller still probes at every family boundary of the SHUFFLED
-    order, so each family keeps 2 bracketing samples per pass.  Pure
-    function of its inputs for unit-testability."""
+def shuffled_pass_order(names, seed, pass_index) -> list[str]:
+    """The entry order of one pass: a seeded shuffle, deterministic for
+    ``(seed, pass_index)``.  With one fixed order, heavy entries hold the
+    same wall-clock slot in every pass, so drift that builds up through
+    a pass (GC pressure, a co-tenant burst) lands on the same entries
+    every time and survives the median."""
     rng = random.Random(f"{seed}:{pass_index}")
-    fams = list(fams_in_pass)
-    rng.shuffle(fams)
-    return [
-        (fam, rng.sample(list(fam_groups[fam]), len(fam_groups[fam])))
-        for fam in fams
-    ]
-
-
-def load_isolated_medians(profile_path: str, names, sf=None) -> dict[str, dict]:
-    """Latest isolated steady-state median per bench entry from
-    PROFILE_HISTORY.jsonl (VERDICT r15 task 1, second prong): the
-    committed bench_detail.json carries "windowed X / isolated Y" side
-    by side, so a per-entry windowed median can no longer be quoted as
-    steady state without its isolated context.  Later lines override
-    earlier ones (latest adjudication wins); entries never profiled in
-    isolation are simply absent.  When ``sf`` is given, only lines
-    whose recorded sf_dir parses to the SAME scale factor count —
-    an sf0.1 isolated median pasted next to an sf0.001 windowed median
-    would manufacture a phantom discrepancy instead of context
-    (self-review r16).  A median counts only if it is a real number
-    (ADVICE r16): truthiness dropped a legitimate 0.0 and passed
-    non-numeric junk through; bools are excluded explicitly because
-    ``isinstance(True, int)`` holds.  Pure file-in/dict-out."""
-    names = set(names)
-    out: dict[str, dict] = {}
-    try:
-        with open(profile_path) as fh:
-            for ln in fh:
-                try:
-                    ent = json.loads(ln)
-                except ValueError:
-                    continue
-                ent_sf = str(ent.get("sf_dir", "")).rstrip("/").rsplit(
-                    "sf", 1)[-1]
-                if sf is not None and ent_sf != str(sf):
-                    continue
-                for n, row in (ent.get("entries") or {}).items():
-                    if not (n in names and isinstance(row, dict)):
-                        continue
-                    med = row.get("median")
-                    if isinstance(med, (int, float)) \
-                            and not isinstance(med, bool):
-                        out[n] = {
-                            "isolated_median": med,
-                            "isolated_reps": ent.get("reps"),
-                            "recorded_round": ent.get("round"),
-                            "sf": ent_sf,
-                        }
-    except OSError:
-        pass
-    return out
-
-
-def compute_drift(
-    *,
-    fam_groups: dict[str, list[str]],
-    timings: dict[str, float],
-    families_normalized: dict[str, float],
-    fam_probe,  # callable (cls, fam) -> float, THIS run's probes
-    prev_parsed: dict,
-    prev_round: int,
-    cur_round: int,
-    hist_runs: list[dict],
-    fam_cost_classes: dict[str, tuple] = FAM_COST_CLASSES,
-    probe_classes: tuple = PROBE_CLASSES,
-    cur_warm_pass: bool | None = None,
-    round_votes: list[dict] | None = None,
-    cur_code_hash: str | None = None,
-) -> dict:
-    """The families_vs_prev block (round-over-round family drift +
-    probe-based attribution).  Pure function of its inputs so the
-    attribution and fallback rules are unit-testable (VERDICT r12
-    task 3) without a SparkSession or the filesystem.
-
-    Two ratio views per family: normalized (÷ each run's own probe)
-    and RAW seconds over the SHARED query set.  Prev per-query medians
-    come from hist_runs (cross-run MEDIAN over every same-round
-    same-sf history line — VERDICT r11 task 6: one anomalous committed
-    run must not define a round's baseline) when available, else the
-    prev bench file's possibly-truncated queries map.
-
-    Attribution (VERDICT r11 task 1, restricted per ADVICE r12): a
-    family move >1.25× is environment-attributed only when a probe
-    class PLAUSIBLE for that family (fam_cost_classes) moved
-    commensurately (max plausible ratio × 1.1 ≥ raw); an orthogonal
-    class moving keeps UNATTRIBUTED, with the orthogonal match noted
-    in attribution_notes.  Before a prev round carries direct probe
-    baselines (pre-r12 history), the shuffle ratio is inferred from
-    raw ÷ normalized.  CAVEAT on that inference (ADVICE r13, restoring
-    the pre-extraction comment): it mixes a cross-run-median raw_ratio
-    numerator with the single committed prev file's
-    families_normalized denominator, so it carries ± one run-to-run
-    spread of approximation error — attributions that rest on it are
-    labeled ``probe:shuffle_inferred(approx)`` to keep them visually
-    distinct from direct-baseline attributions."""
-    pf = prev_parsed.get("families_normalized") or {}
-    pq = prev_parsed.get("queries") or {}
-    pq_source = "bench_file"
-    if prev_parsed.get("queries_truncated_to_slowest"):
-        pq_source = "bench_file_truncated"
-    prev_fam_probes: dict[str, dict[str, float]] = {}
-    # Era filter (ADVICE r14): warm-pass-era lines have systematically
-    # lower first-rep medians on heavy-codegen entries, so a cross-run
-    # median over a MIXED-era round can mask a modest real regression
-    # in a warm-pass current run (or manufacture one in a cold run).
-    # When the prev round's lines span both eras, keep only the lines
-    # matching the current run's era and say so (a mixed-era set always
-    # has at least one line of each era, so the filtered set is never
-    # empty).
-    hist_era_note = None
-    if cur_warm_pass is not None and hist_runs:
-        eras = {bool(e.get("warm_pass")) for e in hist_runs}
-        if len(eras) > 1:
-            matching = [
-                e for e in hist_runs
-                if bool(e.get("warm_pass")) == cur_warm_pass
-            ]
-            hist_era_note = (
-                f"hist_runs era-filtered to warm_pass={cur_warm_pass}: "
-                f"kept {len(matching)}/{len(hist_runs)} lines"
-            )
-            hist_runs = matching
-    if hist_runs:
-        all_names = set().union(*(e["queries"].keys() for e in hist_runs))
-        pq = {
-            n: statistics.median(
-                [e["queries"][n] for e in hist_runs if n in e["queries"]]
-            )
-            for n in all_names
-        }
-        pq_source = f"history_median_of_{len(hist_runs)}_runs"
-        # prev-round per-family probe baselines (by class) — cross-run
-        # medians again; entries written before r12 lack
-        # family_probe_sec and contribute nothing
-        for cls in probe_classes:
-            per_fam: dict[str, list[float]] = {}
-            for e in hist_runs:
-                cls_map = (e.get("family_probe_sec") or {}).get(cls) or {}
-                for f, v in cls_map.items():
-                    if v:
-                        per_fam.setdefault(f, []).append(v)
-            if per_fam:
-                prev_fam_probes[cls] = {
-                    f: statistics.median(v) for f, v in per_fam.items()
-                }
-    # raw seconds per family over queries BOTH rounds ran
-    raw_ratios: dict[str, float] = {}
-    fam_shared: dict[str, tuple[list, float]] = {}
-    for fam, names in fam_groups.items():
-        shared = [n for n in names if n in pq]
-        prev_s = sum(pq[n] for n in shared)
-        if shared and prev_s > 0:
-            cur_s = sum(timings[n] for n in shared)
-            raw_ratios[fam] = round(cur_s / prev_s, 3)
-            fam_shared[fam] = (shared, prev_s)
-    probe_ratios: dict[str, dict[str, float]] = {}
-    attribution: dict[str, str] = {}
-    attribution_notes: dict[str, str] = {}
-    for fam in fam_groups:
-        pr: dict[str, float] = {}
-        for cls in probe_classes:
-            prev_v = (prev_fam_probes.get(cls) or {}).get(fam)
-            if prev_v:
-                pr[cls] = round(fam_probe(cls, fam) / prev_v, 3)
-        if "shuffle" not in pr and pf.get(fam) and fam in raw_ratios \
-                and families_normalized.get(fam):
-            norm_ratio = families_normalized[fam] / pf[fam]
-            if norm_ratio > 0:
-                pr["shuffle_inferred"] = round(
-                    raw_ratios[fam] / norm_ratio, 3
-                )
-        probe_ratios[fam] = pr
-        raw = raw_ratios.get(fam)
-        if raw is None:
-            continue
-        plaus = set(fam_cost_classes.get(fam, probe_classes))
-        plausible_pr = {
-            c: v for c, v in pr.items()
-            if (c[: -len("_inferred")] if c.endswith("_inferred") else c)
-            in plaus
-        }
-        if raw <= 1.25:
-            attribution[fam] = "within_band"
-        elif plausible_pr and max(plausible_pr.values()) * 1.1 >= raw:
-            best = max(plausible_pr, key=plausible_pr.get)
-            # the inferred ratio is an approximation (see docstring) —
-            # mark attributions that rest on it (ADVICE r13)
-            attribution[fam] = "probe:" + best + (
-                "(approx)" if best.endswith("_inferred") else ""
-            )
-        else:
-            attribution[fam] = "UNATTRIBUTED_suspect_real_regression"
-            # Cross-vote attribution (r15; hardened r16 per ADVICE
-            # r15): before flagging, ask the round's OTHER same-code
-            # votes.  The committed vote is the round's
-            # median-normalized-total pick, but a family-local one-off
-            # (r15 vote 6: flagship 2.648s vs 0.88-1.41s in the other
-            # seven votes) can ride in on an otherwise-median vote.
-            # If the cross-vote MEDIAN of this family's shared-query
-            # sum is itself within the 1.25x band, the regression does
-            # not reproduce on byte-identical code — environment by
-            # construction.  Two r16 hardenings:
-            #   * "same code" is now VERIFIED, not assumed: only votes
-            #     whose recorded code_hash equals the committed vote's
-            #     count toward the downgrade median (ADVICE r15: a
-            #     real-but-intermittent regression must not be
-            #     relabeled environmental on unverified votes).  Votes
-            #     without a hash (pre-r16) or with a different hash
-            #     contribute EVIDENCE ONLY (an attribution_note a
-            #     human still adjudicates), never the downgrade.
-            #   * the median is NORMALIZED: each vote's family sum ÷
-            #     that vote's own calib, against the median of the
-            #     prev-round history lines' sum ÷ calib (ADVICE r15:
-            #     raw seconds conflate host speed with code speed — a
-            #     fast host window across the round's votes could mask
-            #     a real regression).  Raw fallback (flagged in the
-            #     note) only when no prev history line carries calib.
-            # >=3 votes so one outlier cannot define the median.
-            if round_votes and fam in fam_shared:
-                shared, prev_s = fam_shared[fam]
-                covering = [
-                    v for v in round_votes
-                    if all(n in v.get("queries", {}) for n in shared)
-                ]
-                hashed = [
-                    v for v in covering
-                    if cur_code_hash and v.get("code_hash") == cur_code_hash
-                ]
-                prev_norms = [
-                    sum(e["queries"][n] for n in shared) / e["calib"]
-                    for e in (hist_runs or [])
-                    if e.get("calib")
-                    and all(n in e.get("queries", {}) for n in shared)
-                ]
-
-                def _vote_ratio(vs: list[dict]) -> tuple[float, str]:
-                    if prev_norms and all(v.get("calib") for v in vs):
-                        med = statistics.median(
-                            sum(v["queries"][n] for n in shared)
-                            / v["calib"]
-                            for v in vs
-                        )
-                        return (
-                            round(med / statistics.median(prev_norms), 3),
-                            "normalized",
-                        )
-                    med = statistics.median(
-                        sum(v["queries"][n] for n in shared) for v in vs
-                    )
-                    return round(med / prev_s, 3), "raw_fallback"
-
-                if len(hashed) >= 3:
-                    med_ratio, basis = _vote_ratio(hashed)
-                    if med_ratio <= 1.25:
-                        attribution[fam] = (
-                            "round_votes:median_within_band"
-                        )
-                        attribution_notes[fam] = (
-                            f"committed-vote raw ratio {raw}x, but the "
-                            f"round's cross-vote {basis} median over "
-                            f"{len(hashed)} code-hash-verified votes "
-                            f"is {med_ratio}x — within band; the "
-                            f"committed vote carries a family-local "
-                            f"one-off"
-                        )
-                elif len(covering) >= 3:
-                    # enough covering votes, but fewer than 3 are
-                    # code-hash-verified: emit the evidence (with the
-                    # honest verified/unverified split) for a human,
-                    # keep the flag
-                    med_ratio, basis = _vote_ratio(covering)
-                    if med_ratio <= 1.25:
-                        attribution_notes[fam] = (
-                            f"cross-vote {basis} median over "
-                            f"{len(covering)} covering votes is "
-                            f"{med_ratio}x — within band, but only "
-                            f"{len(hashed)} of them are code-hash-"
-                            f"verified (<3): UNVERIFIED evidence, not "
-                            f"counted toward a downgrade; human "
-                            f"adjudication required"
-                        )
-            if attribution[fam] == "UNATTRIBUTED_suspect_real_regression":
-                orthogonal = {
-                    c: v for c, v in pr.items() if c not in plausible_pr
-                }
-                if orthogonal and max(orthogonal.values()) * 1.1 >= raw:
-                    c = max(orthogonal, key=orthogonal.get)
-                    attribution_notes[fam] = (
-                        f"orthogonal probe {c} moved {orthogonal[c]}x but "
-                        f"the family never exercises that cost class "
-                        f"(plausible: {sorted(plaus)}) — not credited"
-                    )
-    common = [n for n in timings if n in pq]
-    prev_common = round(sum(pq[n] for n in common), 3)
-    out = {
-        "prev_round": prev_round,
-        "this_round": cur_round,
-        "prev_queries_source": pq_source,
-        "ratios": {
-            f: round(v / pf[f], 3)
-            for f, v in families_normalized.items()
-            if pf.get(f)
-        },
-        "raw_ratios_shared_queries": raw_ratios,
-        "prev_n_runs": len(hist_runs) if hist_runs else 1,
-        "probe_ratios": probe_ratios,
-        "attribution": attribution,
-        # which classes each family exercises — the attribution filter
-        # input, emitted so an ignored orthogonal match is auditable
-        "family_cost_classes": {
-            f: list(fam_cost_classes.get(f, probe_classes))
-            for f in fam_groups
-        },
-        # VERDICT r8 task 6: cross-round totals over the intersection
-        # of query sets — the honest 2x-gate input
-        "common_queries": len(common),
-        "common_queries_total": round(
-            sum(timings[n] for n in common), 3
-        ),
-        "common_queries_total_prev": prev_common,
-        "common_total_ratio": round(
-            sum(timings[n] for n in common) / prev_common, 3
-        ) if prev_common else None,
-    }
-    if hist_era_note:
-        out["hist_era_note"] = hist_era_note
-        attribution_notes.setdefault("_hist_era", hist_era_note)
-    if attribution_notes:
-        out["attribution_notes"] = attribution_notes
-    return out
+    return rng.sample(list(names), len(names))
 
 
 def default_warm_dir(sf_dir: str) -> str:
-    """Default codegen-warm-pass directory: the sf0.001 SIBLING of the
-    timed sf_dir (ADVICE r14: a hardcoded absolute path silently
-    disabled the warm pass on any other host layout, reintroducing the
-    first-rep codegen outliers the warm_pass era marker exists to
-    prevent).  Pure path math so the rule is unit-testable."""
+    """The codegen warm pass's input: the sf0.001 sibling of ``sf_dir``."""
     return os.path.join(
         os.path.dirname(os.path.abspath(sf_dir.rstrip("/"))), "sf0.001"
     )
 
 
-def warm_marker_effective(ok: int, failed: int) -> bool:
-    """Whether a completed warm pass actually sank the per-JVM codegen
-    compiles (ADVICE r14): the warm_pass era marker must reflect
-    compiles ACTUALLY sunk — if most entries raised (e.g. the warm dir
-    exists but holds no usable parquet) the timed first reps are still
-    cold and a true marker would lie to era-aware drift analysis.
-    Rule: at least half the entries (and at least one) completed —
-    ceil division, so a strict-majority failure (e.g. 17 ok / 18
-    failed) never records a true marker."""
-    return ok >= max(1, (ok + failed + 1) // 2)
+def warm_page_cache(path: str) -> int:
+    """Read every byte under ``path`` once (untimed), so the timed reps
+    do not pay cold-cache reads; returns the bytes read.  A ``.parquet``
+    entry may be a directory."""
+    if os.path.isdir(path):
+        return sum(
+            warm_page_cache(os.path.join(path, sub))
+            for sub in sorted(os.listdir(path))
+        )
+    n = 0
+    with open(path, "rb") as fh:
+        while chunk := fh.read(1 << 22):
+            n += len(chunk)
+    return n
 
 
-def render_stdout_line(payload: dict) -> str:
-    """Render the driver-facing stdout JSON line under its size cap.
+def materialize(df) -> None:
+    """Run the whole plan without collecting rows: the ``noop`` sink."""
+    df.write.format("noop").mode("overwrite").save()
 
-    The driver captures only the LAST ~2000 chars of stdout (r5), so
-    the line must stay under 1500 chars — degrade gracefully, dropping
-    the LEAST valuable detail first:
 
-    1. slim ``selection`` to its scalars (the per-vote normalized-
-       totals list grows with the round's vote count and duplicates
-       bench_detail.json's ``committed_vote_selection``) — every char
-       freed keeps one more per-query timing in the committed
-       artifact, which next round's drift math prefers whole;
-    2. truncate ``queries`` to the slowest N, one entry at a time
-       (ADVICE r15: the old keep-step of 5 starting at len-5 skipped
-       truncation entirely for <=5-entry maps and could leave a
-       1401-1499-char line with only 5 timings kept), stamping
-       ``queries_full_in`` so artifact readers know the untruncated
-       map lives in bench_detail.json's ``queries_median`` (it is
-       also on stderr and in BENCH_HISTORY.jsonl);
-    3. last resort: drop ``queries`` — a valid headline line always
-       prints (r5 advice: never discard a completed run over a
-       formatting cap).
+def time_entry(spark, fn, sf_dir: str) -> float:
+    """Seconds to build one entry's frame and run it to the noop sink.
+    Caches left by an earlier entry are dropped first, so no entry rides
+    another's persisted intermediates."""
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    materialize(fn(spark, sf_dir))
+    return time.perf_counter() - t0
 
-    Pure function of the payload alone (selection and queries are
-    read from it, so the rendered parts can never disagree with the
-    rest of the line); mutates a copy so the cap rules are
-    unit-testable."""
-    payload = dict(payload)
-    sel_meta = payload.get("selection") or {}
-    full_queries = payload.get("queries") or {}
-    line = json.dumps(payload)
-    if len(line) > 1400:
-        payload["selection"] = {
-            k: sel_meta[k]
-            for k in ("rule", "votes_considered", "selected_vote_index",
-                      "selected_normalized_total", "selected_is_current_run")
-            if k in sel_meta
-        }
-        line = json.dumps(payload)
-    if len(line) > 1400 and full_queries:
-        by_slow = sorted(full_queries.items(), key=lambda kv: -kv[1])
-        payload["queries_full_in"] = "bench_detail.json:queries_median"
-        for keep in range(len(by_slow) - 1, 0, -1):
-            payload["queries"] = dict(by_slow[:keep])
-            payload["queries_truncated_to_slowest"] = keep
-            line = json.dumps(payload)
-            if len(line) <= 1400:
-                break
-    if len(line) > 1400:
-        payload.pop("queries", None)
-        payload.pop("queries_truncated_to_slowest", None)
-        payload.pop("queries_full_in", None)
-        line = json.dumps(payload)
-        # the pointer to the full per-entry map is kept only when
-        # timings were actually shed AND it fits under the cap — it
-        # must not push an already-oversized line further over, nor
-        # imply truncation on a payload that never carried queries
-        # (self-review r16)
-        if full_queries:
-            candidate = dict(payload)
-            candidate["queries_full_in"] = (
-                "bench_detail.json:queries_median"
-            )
-            cand_line = json.dumps(candidate)
-            if len(cand_line) <= 1400:
-                line = cand_line
+
+def run_passes(spark, fns: dict, sf_dir: str, reps: int, seed: int):
+    """``reps`` seeded-shuffled passes over ``fns`` (name -> builder).
+
+    Returns ``(runs, failed)``: the seconds of every completed rep per
+    name, and the names that raised.  A failure's traceback goes to
+    stderr and its entry is not run again."""
+    runs: dict[str, list[float]] = {n: [] for n in fns}
+    failed: list[str] = []
+    for p in range(reps):
+        t_pass = time.perf_counter()
+        for name in shuffled_pass_order(fns, seed, p):
+            if name in failed:
+                continue
+            try:
+                runs[name].append(time_entry(spark, fns[name], sf_dir))
+            except Exception:  # one broken entry must not end the run
+                failed.append(name)
+                print(f"# FAILED {name} (pass {p + 1}):", file=sys.stderr)
+                traceback.print_exc(file=sys.stderr)
+        print(
+            f"# pass {p + 1}/{reps}: "
+            f"{time.perf_counter() - t_pass:.1f}s",
+            file=sys.stderr,
+        )
+    return runs, failed
+
+
+def sf_of(sf_dir: str):
+    """The scale factor named by ``sf_dir`` (``.../sf0.1`` -> 0.1)."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
+
+
+def render_line(payload: dict) -> str:
+    """The stdout result line; compact, so every median fits the cap."""
+    line = json.dumps(payload, separators=(",", ":"))
+    if len(line) > LINE_CAP:
+        raise ValueError(
+            f"stdout line is {len(line)} chars, over the {LINE_CAP} cap"
+        )
     return line
 
 
-def collect_round_votes(
-    hist_path: str, rnd, sf, warm_pass: bool, names, *, code_hash=None
-) -> tuple[list[dict], int, int]:
-    """This round's comparable BENCH_HISTORY votes for committed-vote
-    selection: same round, same sf, same warm-pass era, same query-name
-    set (a vote with a different entry set ran different code mid-round
-    — its total is not comparable), and — when both sides carry one
-    (r16, ADVICE r15) — the same code_hash (a vote recorded on
-    different package/bench code is not the same experiment; votes
-    without the key, i.e. pre-r16 lines, still pass for SELECTION —
-    the median pick is robust to them — but never toward the drift
-    downgrade, which filters strictly in compute_drift).  Returns
-    (votes, n_excluded_for_query_set_mismatch, n_excluded_for_code_
-    hash_mismatch); unreadable lines are skipped, a missing file
-    yields no votes.  Pure file-in/list-out so the filter rules are
-    unit-testable."""
-    votes: list[dict] = []
-    mismatched = 0
-    hash_mismatched = 0
-    names = set(names)
-    try:
-        with open(hist_path) as fh:
-            for ln in fh:
-                try:
-                    ent = json.loads(ln)
-                except ValueError:
-                    continue
-                if (
-                    ent.get("round") == rnd
-                    and ent.get("sf") == sf
-                    and ent.get("queries")
-                    and ent.get("calib")
-                    and bool(ent.get("warm_pass")) == warm_pass
-                ):
-                    if set(ent["queries"]) != names:
-                        mismatched += 1
-                    elif (
-                        code_hash
-                        and ent.get("code_hash")
-                        and ent["code_hash"] != code_hash
-                    ):
-                        hash_mismatched += 1
-                    else:
-                        votes.append(ent)
-    except OSError:
-        pass
-    return votes, mismatched, hash_mismatched
-
-
-def select_committed_vote(
-    *, votes: list[dict], current: dict
-) -> tuple[dict, dict]:
-    """VERDICT r14 task 2: the committed BENCH_r{N}.json must be the
-    round's REPRESENTATIVE vote, not whichever run happened last —
-    r14 committed a degraded-evening 83.9s last vote while four clean
-    same-code votes sat in history at a 71.2s cross-run median, and
-    the next round's drift math reads the committed file.
-
-    Rule: among this round's same-sf, same-era, same-query-set
-    BENCH_HISTORY votes (current run included), commit the vote whose
-    normalized total (sum of per-query medians ÷ the vote's own
-    shuffle calibration probe) is the median — lower-middle on even
-    counts, first-in-file on exact ties, so re-runs are deterministic.
-    Normalized, not raw: raw seconds conflate host speed with code
-    speed (the very failure mode this guards against).
-
-    Pure function of its inputs so the rule is unit-testable.
-    Returns ``(selected_vote, selection_metadata)``; the metadata is
-    embedded in the committed artifact itself (``selection`` key)."""
-    norm = [
-        round(sum(v["queries"].values()) / v["calib"], 3) for v in votes
-    ]
-    order = sorted(range(len(votes)), key=lambda i: (norm[i], i))
-    sel = order[(len(votes) - 1) // 2]
-    meta = {
-        "rule": "median_normalized_total_over_round_votes",
-        "votes_considered": len(votes),
-        "vote_normalized_totals": norm,
-        "selected_vote_index": sel,
-        "selected_normalized_total": norm[sel],
-        "selected_is_current_run": (
-            votes[sel]["queries"] == current["queries"]
-            and votes[sel]["calib"] == current["calib"]
-        ),
-    }
-    return votes[sel], meta
-
-
-def split_base_extension(
-    *,
-    all_runs: dict[str, list[float]],
-    base_reps: int,
-    probe_samples_by_pass: dict[str, list[list[float]]],
-    fam_of: dict[str, str],
-    fam_cost_classes: dict[str, tuple] = FAM_COST_CLASSES,
-    probe_classes: tuple = PROBE_CLASSES,
-    band: float = 1.25,
-) -> dict[str, dict]:
-    """Per-entry base-window vs extension-window medians + window
-    attribution (VERDICT r13 task 2).
-
-    Extension passes (index >= base_reps) run only the extended-rep
-    entries, so they are contiguous over a small entry set and short in
-    wall-clock: a transient host slowdown during (or just before) them
-    lands coherently on exactly the noisiest entries, and the combined
-    median silently mixes base-window and extension-window samples —
-    the mechanism that manufactured r13's d_minhash_lsh_pairs 1.74×
-    flag (its base passes sampled a slow window; its extension passes
-    sat at the r12 level; the median landed between).
-
-    This makes the mix VISIBLE instead of changing median semantics
-    (the reported median stays the all-samples median for cross-round
-    comparability).  For every entry that ran extension passes it
-    reports both window medians and, when they diverge >``band`` in
-    either direction, attributes the slow window against the per-pass
-    medians of the entry's PLAUSIBLE probe classes (same restriction
-    rule as compute_drift): a probe class whose slow-window/fast-window
-    ratio × 1.1 covers the entry's divergence environment-attributes
-    it; otherwise the skew is flagged UNATTRIBUTED for the isolated
-    profiler (scripts/profile_watchlist.py) to adjudicate.
-
-    Pure function of its inputs (run index == pass index by the timing
-    loop's construction) so the rule is unit-testable without Spark."""
-    pass_med = {
-        cls: [
-            (statistics.median(s) if s else None) for s in passes
-        ]
-        for cls, passes in probe_samples_by_pass.items()
-    }
-    out: dict[str, dict] = {}
-    for name, runs in all_runs.items():
-        if len(runs) <= base_reps:
-            continue
-        base, ext = runs[:base_reps], runs[base_reps:]
-        bm = statistics.median(base)
-        em = statistics.median(ext)
-        if not bm or not em:
-            continue
-        ratio = em / bm
-        row: dict = {
-            "base_median": round(bm, 3),
-            "extension_median": round(em, 3),
-            "extension_over_base": round(ratio, 3),
-        }
-        if max(ratio, 1.0 / ratio) <= band:
-            row["window_attribution"] = "within_band"
-        else:
-            slow_is_ext = ratio > 1.0
-            move = ratio if slow_is_ext else 1.0 / ratio
-            side = "extension" if slow_is_ext else "base"
-            plaus = set(
-                fam_cost_classes.get(fam_of.get(name, ""), probe_classes)
-            )
-            best_cls, best = None, 0.0
-            for cls in probe_classes:
-                if cls not in plaus:
-                    continue
-                meds = pass_med.get(cls) or []
-                bvals = [v for v in meds[:base_reps] if v]
-                evals = [v for v in meds[base_reps:len(runs)] if v]
-                if not bvals or not evals:
-                    continue
-                pb = statistics.median(bvals)
-                pe = statistics.median(evals)
-                if not pb or not pe:
-                    continue
-                cr = (pe / pb) if slow_is_ext else (pb / pe)
-                if cr > best:
-                    best_cls, best = cls, cr
-            row["slow_window"] = side
-            if best_cls is not None:
-                row["probe_window_ratio"] = {best_cls: round(best, 3)}
-            if best_cls is not None and best * 1.1 >= move:
-                row["window_attribution"] = (
-                    f"probe:{best_cls}_{side}_window"
-                )
-            else:
-                row["window_attribution"] = (
-                    f"UNATTRIBUTED_{side}_window_skew"
-                )
-        out[name] = row
-    return out
-
-
-def main() -> None:
-    # cwd-independence (ADVICE r11): the package lives next to this
-    # script; a launch from any other directory must still import it
-    _here = os.path.dirname(os.path.abspath(__file__))
-    if _here not in sys.path:
-        sys.path.insert(0, _here)
-    # Python WORKERS unpickle package UDFs too — they read PYTHONPATH,
-    # not the driver's sys.path (must be set before the JVM starts)
-    if _here not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _here + os.pathsep + os.environ.get("PYTHONPATH", "")
-        ).rstrip(os.pathsep)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("datafusion_randgen_spark_bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # NOT bigger: heaps ≥ ~32g degrade this workload 5-10× in local
-        # mode (measured: minhash 24s @ 16g → 116s @ 48g; GC ergonomics)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+@contextlib.contextmanager
+def bench_session(cores: int):
+    """A local[cores] session sized from the host, with its work
+    directory in the system temp dir; both are removed on exit."""
+    heap = heap_mb(mem_available_mb())
+    work_dir = tempfile.mkdtemp(prefix="bench-")
+    print(
+        f"# local[{cores}], heap {heap} MB, work dir {work_dir}",
+        file=sys.stderr,
     )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from datafusion_randgen_spark import queries as cat
-
-    def gen_probe(spark, _sf_dir):
-        """Raw generation throughput: 5M rows × 4 randgen columns via the
-        pure-Catalyst fast path (the 100 TB generation shape)."""
-        from pyspark.sql import functions as F
-
-        from datafusion_randgen_spark.functions import exprs, seeded
-
-        df = spark.range(0, 5_000_000, 1, int(cpus)).select(
-            exprs.int64_uniform_expr(F.lit(1), F.lit(1_000_000)).alias("a"),
-            exprs.float64_normal_expr(F.lit(0.0), F.lit(1.0)).alias("b"),
-            seeded.seeded_int64_uniform(F.col("id"), 1, 100, seed=1).alias("c"),
-            exprs.bool_bernoulli_expr(F.lit(0.5)).alias("d"),
-        )
-        return df.selectExpr(
-            "count(*) AS n", "min(a) AS lo", "max(a) AS hi", "avg(b) AS m"
-        )
-
-    def gen_probe_pandas_udf(spark, _sf_dir):
-        """Parity pandas-UDF path at 1M rows (Arrow round-trip cost)."""
-        from datafusion_randgen_spark import add_udfs
-
-        add_udfs(spark)
-        return spark.sql(
-            "SELECT count(*) AS n, min(x) AS lo, max(x) AS hi FROM "
-            "(SELECT randgen_int64_uniform(1, 1000000) AS x FROM range(0, 1000000))"
-        )
-
-    def cpu_scaling_probe(spark, _sf_dir):
-        """Compute-bound core-scaling probe (VERDICT r20 task 3): a
-        fixed amount of embarrassingly-parallel JVM codegen work — 64M
-        rows × a 24-round xxhash64 chain, partitioned 4× the core
-        count, reduced map-side to 64 groups.  Sized so executor
-        compute dominates the ~0.4s fixed overhead (24M rows measured
-        only 1.67× at 4× cores; 64M reads 2.50× — 1.35s at 32 cores
-        vs 3.38s at 8, count()-driven 3-rep medians).  Every other
-        sf0.1 entry is per-entry-overhead-dominated (~17 MB of data),
-        so their 8-vs-32 core ratios sit at ≈1 and the driver's
-        scaling block cannot SEE parallelism; this entry's timed
-        region is ~100% executor compute with no Python boundary and
-        one 64-row exchange, so its runtime is expected to scale
-        near-linearly with $SPARK_GRAFT_CPUS.  Total work is constant
-        across core counts (same rows, same chain) — only the
-        partition count follows the core count, exactly how a scan
-        parallelizes on a cluster.
-
-        The hash chain feeds the GROUP KEY (pmod 64), not an ungrouped
-        aggregate: the bench's timed action is ``count()``, and Spark
-        prunes a global aggregate's functions under count() (measured:
-        0.31s pruned vs 2.94s computed at 8 cores).  With the chain in
-        the key, the row count depends on every hash — the work cannot
-        be optimized away."""
-        from pyspark.sql import functions as F
-
-        h = F.col("id")
-        for i in range(24):
-            h = F.xxhash64(h, F.lit(i))
-        return (
-            spark.range(0, 64_000_000, 1, int(cpus) * 4)
-            .groupBy(F.pmod(h, F.lit(64)).alias("g"))
-            .agg(F.count("*").alias("n"))
-        )
-
-    bench_queries = {
-        "flagship_randgen_graft": cat.flagship,
-        "gen_expr_5m_rows": gen_probe,
-        "gen_pandas_udf_1m_rows": gen_probe_pandas_udf,
-        "q1_pricing_summary": cat.QUERIES["q1_pricing_summary"],
-        "q3_topk_revenue": cat.QUERIES["q3_topk_revenue"],
-        "q5_regional_revenue": cat.QUERIES["q5_regional_revenue"],
-        "q_window_topk_per_group": cat.QUERIES["q_window_topk_per_group"],
-        "q8_market_share": cat.QUERIES["q8_market_share"],
-        "q_sessionization": cat.QUERIES["q_sessionization"],
-        "q_asof_join": cat.QUERIES["q_asof_join"],
-        "d_exact_dedup": cat.QUERIES["d_exact_dedup"],
-        "d_minhash_lsh_pairs": cat.QUERIES["d_minhash_lsh_pairs"],
-        "d_connected_components": cat.QUERIES["d_connected_components"],
-        "d_embedding_near_dup": cat.QUERIES["d_embedding_near_dup"],
-        "s_ann_bruteforce_topk": cat.QUERIES["s_ann_bruteforce_topk"],
-        "s_ann_ivf_recall": cat.QUERIES["s_ann_ivf_recall"],
-        "t_token_stats": cat.QUERIES["t_token_stats"],
-        "p_training_data_prep": cat.QUERIES["p_training_data_prep"],
-        # r3 additions: the iterative-algorithm family (driver-side
-        # loops over keyed shuffles) and the decontamination join
-        "q_pagerank_transitions": cat.QUERIES["q_pagerank_transitions"],
-        "s_kmeans_embeddings": cat.QUERIES["s_kmeans_embeddings"],
-        "d_contamination_check": cat.QUERIES["d_contamination_check"],
-        # r3 part 2: the histogram exact-percentile (corpus shuffle +
-        # tiny-frame windows) and the COO matmul (hash join + two
-        # map-side-combined aggs) — one probe per new scale family
-        "q_exact_pctl_histogram": cat.QUERIES["q_exact_pctl_histogram"],
-        "q_sparse_matmul": cat.QUERIES["q_sparse_matmul"],
-        # r4: probes for the remaining r3 families (VERDICT r3 task 5)
-        # — frontier BFS (iterative keyed joins), grouped-applyInPandas
-        # EWMA (Arrow batch + ufunc accumulate), LOCF spine windows,
-        # histogram-median impute — plus the new permuted-simhash and
-        # span-coverage dedup ops so regressions in them move BENCH
-        "q_bfs_shortest_path": cat.QUERIES["q_bfs_shortest_path"],
-        "q_ewma_smoothing": cat.QUERIES["q_ewma_smoothing"],
-        "q_forward_fill_locf": cat.QUERIES["q_forward_fill_locf"],
-        "q_median_impute": cat.QUERIES["q_median_impute"],
-        "d_simhash_r6": cat.QUERIES["d_simhash_r6"],
-        "t_dup_span_coverage": cat.QUERIES["t_dup_span_coverage"],
-        # r5: probes for the new scale primitives (range-bucketed
-        # two-phase ntile in RFM) and the winnowing fingerprint family
-        "q_rfm_segmentation": cat.QUERIES["q_rfm_segmentation"],
-        "d_winnowing_fingerprints": cat.QUERIES["d_winnowing_fingerprints"],
-        # r6: the three new dedup families — ExactSubstr anchor-island
-        # spans (digest shuffle + two windows), SemDeDup (kmeans + rw
-        # cluster-local cosine prune), snapshot anti-join dedup — so
-        # regressions in any of them move BENCH
-        "d_exact_substring_spans": cat.QUERIES["d_exact_substring_spans"],
-        "d_semantic_dedup": cat.QUERIES["d_semantic_dedup"],
-        "d_snapshot_dedup": cat.QUERIES["d_snapshot_dedup"],
-        # r7: the iterative BPE merge loop (20 driver-iterated rounds
-        # over the vocab-sized word table) — new family probe
-        "t_bpe_merge_vocab": cat.QUERIES["t_bpe_merge_vocab"],
-        # r9: the skew-routed hot-key rep join (broadcast heavy path +
-        # bounded shuffle tail) — the r9 scale addition; cross-round
-        # totals stay honest via common_queries_total
-        "d_skewed_digest_dedup": cat.QUERIES["d_skewed_digest_dedup"],
-        # r21 (VERDICT r20 task 3): the core-scaling demonstration
-        # probe — the one entry whose 8-vs-32-core ratio is designed
-        # to approach the core ratio (everything else at sf0.1 is
-        # per-entry-overhead-bound).  ADDED, nothing removed/renamed.
-        "cpu_scaling_probe": cpu_scaling_probe,
-    }
-
-    # Family assignment for per-family calibration (VERDICT r6 task 3:
-    # a single global probe couldn't localize the r6 TPC-H drift).
-    # Probes run at family boundaries within every pass; each family
-    # normalizes against the median of its bracketing probe samples
-    # across all passes.
-    _FAM = {
-        "flagship_randgen_graft": "gen",
-        "gen_expr_5m_rows": "gen",
-        "gen_pandas_udf_1m_rows": "gen",
-        "q1_pricing_summary": "tpch",
-        "q3_topk_revenue": "tpch",
-        "q5_regional_revenue": "tpch",
-        "q_window_topk_per_group": "tpch",
-        "q8_market_share": "tpch",
-        "q_sessionization": "events",
-        "q_asof_join": "events",
-        "q_ewma_smoothing": "events",
-        "q_forward_fill_locf": "events",
-        "q_median_impute": "events",
-        "q_rfm_segmentation": "events",
-        "q_exact_pctl_histogram": "events",
-        "q_sparse_matmul": "events",
-        "d_exact_dedup": "dedup",
-        "d_minhash_lsh_pairs": "dedup",
-        "d_embedding_near_dup": "dedup",
-        "d_contamination_check": "dedup",
-        "d_simhash_r6": "dedup",
-        "t_dup_span_coverage": "dedup",
-        "d_winnowing_fingerprints": "dedup",
-        "d_exact_substring_spans": "dedup",
-        "d_snapshot_dedup": "dedup",
-        "d_connected_components": "iterative",
-        "q_pagerank_transitions": "iterative",
-        "s_kmeans_embeddings": "iterative",
-        "q_bfs_shortest_path": "iterative",
-        "d_semantic_dedup": "iterative",
-        "t_bpe_merge_vocab": "iterative",
-        "d_skewed_digest_dedup": "dedup",
-        "s_ann_bruteforce_topk": "similarity",
-        "s_ann_ivf_recall": "similarity",
-        "t_token_stats": "text",
-        "p_training_data_prep": "text",
-        "cpu_scaling_probe": "scaling",
-    }
-
-    # Warmup: JIT/codegen compilation, Arrow runtime init, parquet
-    # footer cache — one-time session costs that would otherwise be
-    # billed to whichever query runs first (measured ~3s on flagship).
-    from datafusion_randgen_spark import add_udfs
-    from datafusion_randgen_spark.sources import load_table
-
-    add_udfs(spark)
-    spark.range(0, 1_000_000, 1, int(cpus)).selectExpr("sum(id) AS s").collect()
-    load_table(spark, sf_dir, "lineitem").limit(1000).count()
-    spark.sql("SELECT count(*) FROM (SELECT randgen_int64_uniform(1, 10) AS x FROM range(1, 1001))").collect()
-
-    # Page-cache warm-up (VERDICT r10 task 1): an untimed byte-level
-    # read of every input parquet.  A cold cache inflates docs-heavy
-    # entries 3-5× and made one full r10 run garbage (89.7s vs 65.9s
-    # warm); the dataset is small enough (~17 MB at sf0.1) that paging
-    # it in unconditionally costs nothing.
-    def _warm(path: str) -> int:
-        # per-file try so one unreadable entry can't silently leave the
-        # rest of the dataset cold; *.parquet may be a DIRECTORY
-        # (sources.load_table supports that layout for events)
-        n = 0
+    try:
+        spark = build_session(work_dir, cores, heap)
         try:
-            if os.path.isdir(path):
-                for sub in sorted(os.listdir(path)):
-                    n += _warm(os.path.join(path, sub))
-                return n
-            with open(path, "rb") as fh:
-                while chunk := fh.read(1 << 22):
-                    n += len(chunk)
-        except OSError:
-            pass
-        return n
+            yield spark
+        finally:
+            stop_session(spark)
+    finally:
+        shutil.rmtree(work_dir, ignore_errors=True)
 
-    warm_bytes = 0
+
+def main() -> int:
+    here = os.path.dirname(os.path.abspath(__file__))
+    # Python workers unpickle package UDFs too; they read PYTHONPATH, not
+    # the driver's sys.path, so it must be set before the JVM starts
+    if here not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
+        os.environ["PYTHONPATH"] = (
+            here + os.pathsep + os.environ.get("PYTHONPATH", "")
+        ).rstrip(os.pathsep)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     try:
-        entries = sorted(os.listdir(sf_dir))
-    except OSError:
-        entries = []
-    for fname in entries:
-        if fname.endswith(".parquet"):
-            warm_bytes += _warm(os.path.join(sf_dir, fname))
-    print(f"# page-cache warm-up: {warm_bytes} bytes", file=sys.stderr)
+        cores = parse_cpus(os.environ.get("SPARK_GRAFT_CPUS"))
+    except ValueError as exc:
+        print(f"bench: {exc}", file=sys.stderr)
+        return 2
+    code_hash = compute_code_hash(here)
+    fns = {name: entry_fn(name) for name in HEADLINE}
 
-    # Codegen warm pass (r14): run every bench entry ONCE, untimed, at
-    # a tiny sf so each entry's Janino/whole-stage-codegen compile is a
-    # sunk per-JVM cost before timing starts.  The r14 vote-3 evidence:
-    # pass-1 cold reps (kmeans 15.6s vs 5.9s steady, connected
-    # -components 11.1s vs 3.9s, the minhash 64-perm compile ~7s of its
-    # 10.6s isolated first rep) drag a 5-rep median one slot and
-    # manufactured an UNATTRIBUTED iterative flag that three same-code
-    # votes then had to absorb.  Codegen source depends on plan shape,
-    # not data volume, so the sf0.001 compile serves the sf0.1 timed
-    # run (AQE may re-plan some stages at the larger sf — partially
-    # effective there, fully effective on the plan-shape-stable heavy
-    # constants).  Same principle as the untimed page-cache/JIT warm
-    # -ups above; on a real cluster these compiles amortize to zero.
-    # Opt out with SPARK_GRAFT_BENCH_WARMPASS=0.
-    # Default warm dir is the sf0.001 SIBLING of sf_dir (ADVICE r14:
-    # the old hardcoded /root/testdata/sf0.001 silently disabled the
-    # warm pass on any other host layout, reintroducing the first-rep
-    # codegen outliers the marker exists to prevent).
-    warm_sf_dir = os.environ.get(
-        "SPARK_GRAFT_WARM_SF_DIR", default_warm_dir(sf_dir)
-    )
-    warm_pass_sec = None
-    warm_ok = warm_fail = 0
-    if os.environ.get("SPARK_GRAFT_BENCH_WARMPASS", "1") == "0":
-        print("# codegen warm pass disabled by SPARK_GRAFT_BENCH_WARMPASS=0",
-              file=sys.stderr)
-    elif not os.path.isdir(warm_sf_dir):
-        # explicit, not silent (ADVICE r14): a missing warm dir means
-        # the timed first reps carry per-JVM compile cost
-        print(
-            f"# codegen warm pass SKIPPED: warm dir {warm_sf_dir} missing "
-            "(set SPARK_GRAFT_WARM_SF_DIR); first reps will be codegen-cold",
-            file=sys.stderr,
+    t_run = time.perf_counter()
+    with bench_session(cores) as spark:
+        warm_bytes = sum(
+            warm_page_cache(p)
+            for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
         )
-    elif os.path.abspath(warm_sf_dir) == os.path.abspath(sf_dir):
-        print(
-            f"# codegen warm pass SKIPPED: warm dir equals timed sf_dir "
-            f"({sf_dir}); first reps will be codegen-cold",
-            file=sys.stderr,
-        )
-    else:
-        t_wp = time.perf_counter()
-        for _name, _fn in bench_queries.items():
-            try:
-                _fn(spark, warm_sf_dir).count()
-                warm_ok += 1
-            except Exception as exc:  # never fail the bench over warm-up
-                warm_fail += 1
-                print(f"# warm pass {_name} skipped: {exc!r}",
-                      file=sys.stderr)
-        spark.catalog.clearCache()
-        # era marker only when compiles were actually sunk (ADVICE
-        # r14) — rule extracted to warm_marker_effective for tests
-        if warm_marker_effective(warm_ok, warm_fail):
-            warm_pass_sec = round(time.perf_counter() - t_wp, 1)
-        else:
+        print(f"# page-cache warm-up: {warm_bytes} bytes", file=sys.stderr)
+
+        # Codegen source depends on plan shape, not data volume, so the
+        # sf0.001 compile serves the timed run.
+        warm_dir = default_warm_dir(sf_dir)
+        if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != \
+                os.path.abspath(sf_dir):
+            t_warm = time.perf_counter()
+            for name, fn in fns.items():
+                try:
+                    materialize(fn(spark, warm_dir))
+                except Exception as exc:  # the timed pass reports it
+                    print(f"# warm pass {name} raised: {exc!r}",
+                          file=sys.stderr)
+            spark.catalog.clearCache()
             print(
-                f"# codegen warm pass INEFFECTIVE ({warm_ok} ok / "
-                f"{warm_fail} failed) — recording warm_pass=false",
+                f"# codegen warm pass at {warm_dir}: "
+                f"{time.perf_counter() - t_warm:.1f}s",
                 file=sys.stderr,
             )
-        print(
-            f"# codegen warm pass at {warm_sf_dir}: "
-            f"{round(time.perf_counter() - t_wp, 1)}s "
-            f"({warm_ok} ok / {warm_fail} failed)",
-            file=sys.stderr,
-        )
-
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-
-    # Iterative driver-loop entries (many small jobs) carry 2x
-    # co-scheduling variance between reps; a 5-rep median is stable
-    # where a 3-rep one can land on a GC-unlucky middle value.
-    extra_reps = {
-        "d_connected_components": max(reps, 5),
-        "q_bfs_shortest_path": max(reps, 5),
-        "q_pagerank_transitions": max(reps, 5),
-        "s_kmeans_embeddings": max(reps, 5),
-        "d_semantic_dedup": max(reps, 5),  # kmeans driver loop inside
-        # the catalog's most expensive entry showed a 3.6-6.1s spread at
-        # 3 reps on unchanged code (r9) — widest in the run; 5 reps so a
-        # real move can't hide behind one GC-unlucky middle value.
-        # Profiled in isolation (r10, 8 reps): steady state is 2.9-3.3s
-        # (unchanged since r8) with a single ~9-15s outlier rep — the
-        # first rep's Janino codegen for the 64-perm signature exprs in
-        # isolation, but full-bench runs show the outlier landing on ANY
-        # rep (GC / host stall), so it gets 7 reps: one outlier then
-        # pulls the median at most one slot off steady state.
-        # queries_runs in bench_detail.json shows the per-rep pattern.
-        "d_minhash_lsh_pairs": max(reps, 7),
-    }
-
-    # Auto-extend reps (VERDICT r10 task 1): any entry whose PREVIOUS
-    # run's max rep exceeded 1.5× its median gets ≥5 reps this run, so
-    # one GC/codegen-unlucky rep can't drag a 3-rep median.  Source:
-    # the last run's bench_detail.json (committed every round).
-    auto_extended: list[str] = []
-    try:
-        with open(os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
-        )) as fh:
-            _prev_detail = json.load(fh)
-        _pm = _prev_detail.get("queries_median") or {}
-        # spreads are only comparable at the SAME scale factor (a
-        # smoke at another sf would flag short-runtime noise instead);
-        # details written before the sf field existed pass through
-        if str(_prev_detail.get("sf", sf)) != str(sf):
-            raise ValueError("prev bench_detail is a different sf")
-        for _n, _sp in (_prev_detail.get("queries_spread") or {}).items():
-            if (
-                _n in bench_queries
-                and _pm.get(_n)
-                and _sp[1] > 1.5 * _pm[_n]
-                and extra_reps.get(_n, reps) < 5
-            ):
-                extra_reps[_n] = max(reps, 5)
-                auto_extended.append(_n)
-    except (OSError, ValueError, KeyError, IndexError, TypeError):
-        pass
-    if auto_extended:
-        print(
-            f"# auto-extended reps (prev spread >1.5x median): {auto_extended}",
-            file=sys.stderr,
-        )
-
-    # Environment calibration: fixed probes, identical every round.
-    # Cross-round comparisons should read value/calib — VM boots differ
-    # (measured: the same commit's per-stage overhead varies ~1.7×
-    # between boots), and this separates machine speed from plan
-    # regressions.  THREE cost classes (VERDICT r11 task 1 — the r11
-    # anomaly hid in classes the shuffle probe doesn't span: dedup/
-    # similarity families ran 1.4-1.5× while the JVM shuffle probe
-    # moved 1.07×):
-    #   shuffle     — JVM exchange + hash agg (whole-stage codegen)
-    #   pyworker    — Python-worker spawn + Arrow IPC round trip
-    #   driver_loop — scheduler/driver latency over many small jobs
-    def calib_probe() -> float:
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 20_000_000, 1, int(cpus))
-            .selectExpr("id % 100000 AS k", "id AS v")
-            .groupBy("k")
-            .agg({"v": "sum"})
-            .selectExpr("count(*) AS n", "sum(`sum(v)`) AS s")
-            .collect()
-        )
-        return time.perf_counter() - t0
-
-    # module-level pandas import: pandas_udf resolves the type hints
-    # against the function's module globals, so a main()-local alias
-    # fails hint inference
-    global pd
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf as _pandas_udf
-
-    @_pandas_udf("long")
-    def _probe_double(s: pd.Series) -> pd.Series:
-        return s * 2
-
-    def pyworker_probe() -> float:
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 200_000, 1, int(cpus))
-            .select(_probe_double("id").alias("v"))
-            .selectExpr("sum(v) AS s")
-            .collect()
-        )
-        return time.perf_counter() - t0
-
-    def driver_loop_probe() -> float:
-        t0 = time.perf_counter()
-        for _ in range(20):
-            spark.range(0, 1000, 1, 1).selectExpr("sum(id) AS s").collect()
-        return time.perf_counter() - t0
-
-    # first-call costs (Python-worker pool spawn) must not be billed to
-    # the first boundary's probe sample
-    pyworker_probe()
-    driver_loop_probe()
-
-    _PROBE_FNS = {
-        "shuffle": calib_probe,
-        "pyworker": pyworker_probe,
-        "driver_loop": driver_loop_probe,
-    }
-
-    # family order = first appearance in the (ordered) query dict
-    fam_groups: dict[str, list[str]] = {}
-    for name in bench_queries:
-        fam_groups.setdefault(_FAM[name], []).append(name)
-
-    # ---- pass-interleaved timing loop (VERDICT r12 task 1) ----
-    # n_passes = the largest per-query rep count; pass p runs each
-    # query once iff p < its rep count, in family order.  ONE probe
-    # sample per class at each family boundary present in the pass
-    # (leading each family + one trailing), so every family collects
-    # 2 bracketing samples per class per pass — ≥6 samples over the
-    # default 3 passes, where the old layout had 2 medians-of-3 from a
-    # single contiguous window.
-    n_passes = max(extra_reps.get(n, reps) for n in bench_queries)
-    all_runs: dict[str, list[float]] = {n: [] for n in bench_queries}
-    rows_of: dict[str, int] = {}
-    probes_by_class: dict[str, list[float]] = {c: [] for c in PROBE_CLASSES}
-    probe_samples_by_pass: dict[str, list[list[float]]] = {
-        c: [] for c in PROBE_CLASSES
-    }
-    fam_probe_samples: dict[str, dict[str, list[float]]] = {
-        c: {} for c in PROBE_CLASSES
-    }
-
-    # ADVICE r13: at n_passes==1 a family's probe would be the median
-    # of just 2 single raw samples — noisier than the pre-r13 layout's
-    # 2 medians-of-3.  Below 3 passes each boundary takes 3 raw samples
-    # per class and records their MEDIAN as the boundary sample (same
-    # data shape downstream); at >=3 passes the cross-pass bracketing
-    # already yields >=6 samples per family per class, so one raw
-    # sample per boundary suffices.
-    samples_per_boundary = 3 if n_passes < 3 else 1
-
-    def boundary_probe() -> dict[str, float]:
-        out = {}
-        for cls in PROBE_CLASSES:
-            v = round(statistics.median(
-                _PROBE_FNS[cls]() for _ in range(samples_per_boundary)
-            ), 3)
-            probes_by_class[cls].append(v)
-            probe_samples_by_pass[cls][-1].append(v)
-            out[cls] = v
-        return out
-
-    # Seeded per-pass order shuffle (VERDICT r15 task 1): with a fixed
-    # order, heavy entries sit in the same wall-clock position of every
-    # pass, so time-structured host drift compounds in the same victim
-    # set across passes and survives the median (the r13-r15
-    # adjudication treadmill).  Shuffling family order AND within-
-    # family entry order per pass decorrelates entry from position;
-    # the seed and executed order are recorded in bench_detail.json so
-    # any run is reproducible.  Layout rule is pure+unit-tested
-    # (shuffled_pass_order); probe bracketing per family is unchanged.
-    try:
-        shuffle_seed = int(
-            os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE_SEED", "16")
-        )
-    except ValueError:
-        # an operator typo must not kill a run AFTER session startup,
-        # probe warm-up, and the codegen warm pass have all been paid —
-        # a valid headline line always prints (r5 rule)
-        shuffle_seed = 16
-        print(
-            "# SPARK_GRAFT_BENCH_SHUFFLE_SEED not an int — "
-            "falling back to seed 16", file=sys.stderr,
-        )
-    pass_entry_order: list[list[str]] = []
-    for p in range(n_passes):
-        fams_in_pass = [
-            fam for fam, names in fam_groups.items()
-            if any(extra_reps.get(n, reps) > p for n in names)
-        ]
-        if not fams_in_pass:
-            break
-        pass_layout = shuffled_pass_order(
-            fams_in_pass, fam_groups, shuffle_seed, p
-        )
-        for cls in PROBE_CLASSES:
-            probe_samples_by_pass[cls].append([])
-        t_pass = time.perf_counter()
-        pass_probes: list[dict[str, float]] = []
-        executed: list[str] = []
-        for fam, fam_names in pass_layout:
-            pass_probes.append(boundary_probe())
-            for name in fam_names:
-                if extra_reps.get(name, reps) <= p:
-                    continue
-                # per-query isolation: operators that persist()
-                # intermediates (minhash shingles, LSH codes) must not
-                # ride caches left by an earlier query or pass, nor
-                # leak theirs into the next measurement
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                df = bench_queries[name](spark, sf_dir)
-                rows_of[name] = df.count()  # materialize fully
-                all_runs[name].append(round(time.perf_counter() - t0, 3))
-                executed.append(name)
-        pass_probes.append(boundary_probe())
-        pass_entry_order.append(executed)
-        for i, (fam, _fam_names) in enumerate(pass_layout):
-            for cls in PROBE_CLASSES:
-                fam_probe_samples[cls].setdefault(fam, []).extend(
-                    (pass_probes[i][cls], pass_probes[i + 1][cls])
-                )
-        print(
-            f"# pass {p + 1}/{n_passes}: "
-            f"{round(time.perf_counter() - t_pass, 1)}s over "
-            f"{len(fams_in_pass)} families (seeded-shuffled order)",
-            file=sys.stderr,
-        )
-
-    timings: dict[str, float] = {}
-    spread: dict[str, list[float]] = {}
-    for name in bench_queries:
-        runs = all_runs[name]
-        timings[name] = round(statistics.median(runs), 3)
-        spread[name] = [round(min(runs), 3), round(max(runs), 3)]
-        print(
-            f"# {name}: median {timings[name]}s of {len(runs)} "
-            f"interleaved passes "
-            f"(spread {spread[name][0]}-{spread[name][1]}s, "
-            f"{rows_of[name]} rows)",
-            file=sys.stderr,
-        )
-
-    # Per-family calibration: each family normalizes against the MEDIAN
-    # of its bracketing probe samples across all passes, so a transient
-    # host slowdown (the r6 TPC-H 1.3-1.45x mystery) shows up in that
-    # family's own probe instead of being smeared across the global
-    # scalar.
-    def fam_probe(cls: str, fam: str) -> float:
-        return statistics.median(fam_probe_samples[cls][fam])
-
-    def fam_calib(fam: str) -> float:
-        return fam_probe("shuffle", fam)
-
-    families_normalized = {
-        fam: round(sum(timings[n] for n in names) / fam_calib(fam), 3)
-        for fam, names in fam_groups.items()
-        if fam_calib(fam) > 0
-    }
-    probes = probes_by_class["shuffle"]  # legacy alias for calib
-    calib = round(statistics.median(probes), 3)
-
-    # Per-pass family sums over the queries that ran in that pass —
-    # the task-1 demonstration artifact: a transient host slowdown now
-    # reads as ONE elevated pass across every family (a row), where the
-    # old contiguous layout showed it as one elevated family.  Passes
-    # 0..2 cover the full query set (every entry runs ≥3 reps); later
-    # passes cover only the extended-rep entries, so compare rows only
-    # within the same pass index range.
-    per_pass_family_sums = {
-        fam: [
-            round(s, 3) if cnt else None
-            for s, cnt in (
-                (
-                    sum(all_runs[n][p] for n in names if len(all_runs[n]) > p),
-                    sum(1 for n in names if len(all_runs[n]) > p),
-                )
-                for p in range(n_passes)
-            )
-        ]
-        for fam, names in fam_groups.items()
-    }
-
-    # VERDICT r13 task 2: per-entry base-vs-extension window split —
-    # extension passes cover only the extended-rep entries, so a slow
-    # window there (or in the base window, the r13 minhash shape)
-    # skews the all-samples median; this surfaces and attributes it.
-    median_base_vs_extension = split_base_extension(
-        all_runs=all_runs,
-        base_reps=reps,
-        probe_samples_by_pass=probe_samples_by_pass,
-        fam_of=_FAM,
-    )
-    for _n, _row in median_base_vs_extension.items():
-        if _row["window_attribution"] != "within_band":
+        else:
             print(
-                f"# window skew {_n}: base {_row['base_median']}s vs "
-                f"extension {_row['extension_median']}s -> "
-                f"{_row['window_attribution']}", file=sys.stderr,
+                f"# codegen warm pass SKIPPED: no separate {warm_dir}; "
+                "first reps carry codegen compiles",
+                file=sys.stderr,
             )
 
-    # The driver captures only the LAST ~2000 chars of stdout, so the
-    # one JSON line must stay well under that (round-4's 2.6 KB line
-    # made BENCH_r04.json unparseable).  Per-query spreads go to stderr
-    # and a side file; the stdout line carries medians only and is
-    # progressively trimmed if the catalog ever grows it past ~1.4 KB.
-    print(f"# queries_spread: {json.dumps(spread)}", file=sys.stderr)
-    detail = {
-        "sf": sf,  # which scale factor produced these medians/spreads
-        # VERDICT r12 task 1 (interleaving) + r15 task 1 (seeded
-        # per-pass order shuffle)
-        "bench_rep_layout": "pass_interleaved_shuffled",
-        "pass_order_seed": shuffle_seed,
-        # executed entry order per pass — the shuffle's audit trail
-        "pass_entry_order": pass_entry_order,
-        # latest isolated steady-state medians (PROFILE_HISTORY.jsonl)
-        # next to the windowed medians, so a per-entry number is never
-        # read without its isolated context (VERDICT r15 task 1)
-        "queries_isolated_median": load_isolated_medians(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "PROFILE_HISTORY.jsonl"),
-            bench_queries,
-            sf=sf,  # an sf0.1 isolated median is not sf0.001 context
-        ),
-        "queries_median": dict(timings),  # full map — never truncated
-        "queries_spread": spread,
-        # per-rep sequences: run index == pass index, so a slow pass is
-        # visible as a column across queries instead of an unexplained
-        # per-query spread
-        "queries_runs": all_runs,
-        "per_pass_family_sums": per_pass_family_sums,
-        # base-window vs extension-window medians + skew attribution
-        # (VERDICT r13 task 2); the headline median stays all-samples
-        "median_base_vs_extension": median_base_vs_extension,
-        "reps": reps,
-        "n_passes": n_passes,
-        "extra_reps": extra_reps,
-        "auto_extended_reps": auto_extended,
-        "page_cache_warm_bytes": warm_bytes,
-        # untimed tiny-sf codegen warm pass (r14) — null when disabled
-        "codegen_warm_pass_sec": warm_pass_sec,
-        # per-entry warm success counts (ADVICE r14): warm_pass_sec
-        # (and the history era marker) is withheld when a majority of
-        # warm-ups raised, so the marker tracks compiles actually sunk
-        "codegen_warm_pass_entries": {"ok": warm_ok, "failed": warm_fail},
-        "codegen_warm_sf_dir": warm_sf_dir,
-        "calib_probes_sec": probes,
-        # the two extra cost classes (VERDICT r11 task 1); shuffle stays
-        # in the legacy keys above so prior-round tooling keeps parsing
-        "calib_probes_by_class_sec": {
-            c: list(v) for c, v in probes_by_class.items()
-        },
-        # all boundary samples grouped by pass (replaces the pre-r13
-        # calib_probe_samples_sec per-boundary triplets)
-        "probe_samples_by_pass": probe_samples_by_pass,
-        "family_probe_sec": {
-            c: {f: round(fam_probe(c, f), 3) for f in fam_groups}
-            for c in PROBE_CLASSES
-        },
-        # each family's bracketing probe vs this run's own global median
-        # of the same class — a mid-run host slowdown (the r11 anomaly
-        # shape: late families uniformly slow) shows here even when no
-        # prev-round baseline exists for the class
-        "family_probe_vs_run_median": {
-            c: {
-                f: round(fam_probe(c, f) / statistics.median(probes_by_class[c]), 3)
-                for f in fam_groups
-            }
-            for c in PROBE_CLASSES
-            if statistics.median(probes_by_class[c]) > 0
-        },
-        "family_calib_sec": {f: round(fam_calib(f), 3) for f in fam_groups},
-        "family_cost_classes": {
-            f: list(FAM_COST_CLASSES.get(f, PROBE_CLASSES))
-            for f in fam_groups
-        },
-        "families": {f: list(ns) for f, ns in fam_groups.items()},
-        "families_normalized": families_normalized,
-        # per-query time ÷ the query's own family probe (VERDICT r6
-        # task 3) — cross-round drift localizes to a family
-        "queries_normalized": {
-            n: round(t / fam_calib(_FAM[n]), 3)
-            for n, t in timings.items()
-            if fam_calib(_FAM[n]) > 0
-        },
-    }
-    # round-over-round family drift (VERDICT r7 task 6; reworked r9,
-    # r10, r12; extracted to compute_drift for unit-testability in
-    # r13).  Round inference (VERDICT r9 item 4 / ADVICE r9): the
-    # driver's wrap-up for round N writes CORRECTNESS_rN first, THEN
-    # records BENCH_rN — so if BENCH for the max correctness round is
-    # absent we ARE that round's official bench run; if present, that
-    # round is fully recorded and this is the next round's session.
-    # prev candidates are always < this_round, so the pick can never
-    # resolve to the run's own round; the one filesystem-
-    # indistinguishable case (an immediate re-run after the round's own
-    # snapshot landed) is flagged via prev_age_minutes instead of
-    # silently mislabeled.
-    # Round inference runs BEFORE the drift block (ADVICE r10): the
-    # history append below reads detail["this_round"], so a drift-block
-    # failure must not leave the history entry with round: null.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    try:
-        max_corr = max(
-            [_round_of(p) for p in
-             glob.glob(os.path.join(repo_dir, "CORRECTNESS_r*.json"))] or [0]
+        runs, failed = run_passes(spark, fns, sf_dir, REPS, SHUFFLE_SEED)
+
+    queries = {}
+    for name in HEADLINE:
+        r = runs[name]
+        times = (
+            f"median {statistics.median(r):.3f}s max {max(r):.3f}s " if r else ""
         )
-        cur_round = max(1, max_corr + (
-            1 if os.path.exists(
-                os.path.join(repo_dir, f"BENCH_r{max_corr:02d}.json")
-            ) or os.path.exists(
-                os.path.join(repo_dir, f"BENCH_r{max_corr}.json")
-            ) else 0
-        ))
-        detail["this_round"] = cur_round
-    except (OSError, ValueError):
-        cur_round = None
-    # per-round full-medians history: future drift blocks read THIS for
-    # the prev round's per-query map (the stdout BENCH line truncates
-    # past ~1.4 KB); the drift block below takes the MEDIAN over every
-    # same-round same-sf line, so appending a line adds a vote — it
-    # does not override earlier entries for the round.  Appended BEFORE
-    # vote selection (VERDICT r14 task 2) so the current run is itself
-    # a candidate vote.
-    hist_path = os.path.join(repo_dir, "BENCH_HISTORY.jsonl")
-    # code identity of this run (ADVICE r15): recorded per vote so the
-    # cross-vote regression downgrade can REQUIRE byte-identical code
-    # instead of assuming it from round/sf/era equality.
-    # CALL-ONCE invariant (ADVICE r17): the unreadable-slot nonce makes
-    # a recompute on the same broken state disagree with itself, so the
-    # hash must be computed exactly once per run — this call is the
-    # only one — and any future mid-run edit detection must diff file
-    # bytes, not re-call this.
-    code_hash_unreadable: list[str] = []
-    code_hash = compute_code_hash(repo_dir, code_hash_unreadable)
-    cur_vote = {
-        "round": detail.get("this_round"),
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "queries": timings,
-        "calib": calib,
-        # per-family probe medians by cost class — next round's
-        # drift block ratios its probes against these (r12+)
-        "family_probe_sec": detail["family_probe_sec"],
-        # era marker (r14): lines with the tiny-sf codegen warm
-        # pass have first reps free of per-JVM compile cost;
-        # r14 mixes both eras, r15+ is warm-pass-only
-        "warm_pass": warm_pass_sec is not None,
-        # rep count that produced these medians (r15): the committed
-        # artifact's "reps" must describe the SELECTED vote, not
-        # whichever run happened to print the line
-        "reps": reps,
-        # 12-hex sha256 of the package source + bench.py (r16): the
-        # cross-vote downgrade's same-code precondition, verified
-        "code_hash": code_hash,
-    }
-    # ADVICE r17: a salted (never-matching) hash must be diagnosable as
-    # an I/O problem from the vote record alone, not mistaken for a
-    # code edit — absent key ⇔ every source file hashed cleanly
-    if code_hash_unreadable:
-        cur_vote["code_hash_unreadable"] = code_hash_unreadable
-    try:
-        with open(hist_path, "a") as fh:
-            fh.write(json.dumps(cur_vote) + "\n")
-    except OSError:
-        pass
-    # Committed-vote selection (VERDICT r14 task 2): the artifact this
-    # run prints is the round's MEDIAN-normalized-total vote, which may
-    # be an earlier same-round history vote rather than this run.  The
-    # current run's full execution detail still goes to
-    # bench_detail.json either way.
-    commit_timings, commit_calib = timings, calib
-    commit_fam_norm = families_normalized
-    commit_fam_probe_map = detail["family_probe_sec"]
-    commit_reps = reps
-    commit_code_hash = code_hash
-    round_votes_for_drift: list[dict] = []
-    sel_meta = {
-        "rule": "current_run_fallback",
-        "note": "vote selection failed or no votes; committing current run",
-    }
-    try:
-        votes, mismatched, hash_mismatched = collect_round_votes(
-            hist_path, cur_vote["round"], cur_vote["sf"],
-            cur_vote["warm_pass"], timings, code_hash=code_hash,
-        )
-        if not votes or votes[-1]["queries"] != timings:
-            votes.append(cur_vote)  # history append failed above
-        # Vote budget (VERDICT r15 task 2): median selection is
-        # mechanized and gains nothing past ~5 same-code votes — r15
-        # spent 12.  A mechanical stderr nudge, not a hard stop:
-        # re-running past the budget still works (a family flagging
-        # over-band is the legitimate reason to).
-        if len(votes) >= 5:
-            print(
-                f"# vote budget: {len(votes)} comparable votes already "
-                f"recorded this round — the median rule gains nothing "
-                f"past 5; stop re-running unless a family flags "
-                f"over-band", file=sys.stderr,
-            )
-        sel_vote, sel_meta = select_committed_vote(
-            votes=votes, current=cur_vote
-        )
-        # the DRIFT evidence pool is the UNFILTERED same-round vote set
-        # (self-review r16): compute_drift itself applies the strict
-        # hash-match rule for the downgrade, and differently-hashed
-        # votes must still reach the evidence-note path instead of
-        # being silently discarded before it
-        round_votes_for_drift, _, _ = collect_round_votes(
-            hist_path, cur_vote["round"], cur_vote["sf"],
-            cur_vote["warm_pass"], timings,
-        )
-        if not round_votes_for_drift or \
-                round_votes_for_drift[-1]["queries"] != timings:
-            round_votes_for_drift.append(cur_vote)
-        if mismatched:
-            sel_meta["votes_excluded_query_set_mismatch"] = mismatched
-        if hash_mismatched:
-            sel_meta["votes_excluded_code_hash_mismatch"] = hash_mismatched
-        if not sel_meta["selected_is_current_run"]:
-            sel_probe_map = sel_vote.get("family_probe_sec") or {}
-            if not (sel_probe_map.get("shuffle") or {}):
-                # a history vote without per-class probes (hand-
-                # backfilled line) can win the median, but committing
-                # it would ship empty families_normalized and all-zero
-                # probe ratios — every >1.25x family would be stamped
-                # UNATTRIBUTED.  Fall back to the current run, loudly.
-                sel_meta["rule"] = "current_run_fallback"
-                sel_meta["note"] = (
-                    "selected vote lacks family_probe_sec; "
-                    "committing current run instead"
-                )
-                sel_meta["selected_is_current_run"] = True
-                print(
-                    "# committed vote selection OVERRIDDEN: median vote "
-                    "has no family_probe_sec — committing current run",
-                    file=sys.stderr,
-                )
-            else:
-                commit_timings = sel_vote["queries"]
-                commit_calib = sel_vote["calib"]
-                commit_fam_probe_map = sel_probe_map
-                shuf = commit_fam_probe_map.get("shuffle") or {}
-                commit_fam_norm = {
-                    fam: round(
-                        sum(commit_timings[n] for n in names
-                            if n in commit_timings) / shuf[fam], 3)
-                    for fam, names in fam_groups.items()
-                    if shuf.get(fam)
-                }
-                # the committed numbers are the SELECTED vote's; its
-                # rep count (recorded per vote since r15) is what
-                # produced those medians, not this run's --reps
-                commit_reps = sel_vote.get("reps")
-                # …and its code hash (recorded per vote since r16) is
-                # what the drift downgrade must match against
-                commit_code_hash = sel_vote.get("code_hash")
-                print(
-                    f"# committed vote: history vote "
-                    f"{sel_meta['selected_vote_index']} of "
-                    f"{sel_meta['votes_considered']} (normalized total "
-                    f"{sel_meta['selected_normalized_total']}), not this run",
-                    file=sys.stderr,
-                )
-    except (OSError, ValueError, ZeroDivisionError):
-        pass
-    detail["committed_vote_selection"] = sel_meta
-    try:
-        if cur_round is None:
-            raise ValueError("round inference failed")
-        cur_sf = float(sf) if sf.replace(".", "").isdigit() else sf
-        prev_parsed, prev_round, prev_path, skipped = pick_prev_bench(
-            repo_dir, cur_round, cur_sf
-        )
-        if prev_parsed is not None:
-            hist_runs = load_hist_runs(
-                hist_path,
-                prev_round, prev_parsed.get("sf"),
-            )
-            # drift describes the COMMITTED artifact (the file the next
-            # round's math reads), which selection may have made an
-            # earlier same-round vote rather than this run
-            fvp = compute_drift(
-                fam_groups=fam_groups,
-                timings=commit_timings,
-                families_normalized=commit_fam_norm,
-                fam_probe=lambda cls, f: (
-                    (commit_fam_probe_map.get(cls) or {}).get(f, 0.0)
-                ),
-                prev_parsed=prev_parsed,
-                prev_round=prev_round,
-                cur_round=cur_round,
-                hist_runs=hist_runs,
-                cur_warm_pass=warm_pass_sec is not None,
-                round_votes=round_votes_for_drift,
-                cur_code_hash=commit_code_hash,
-            )
-            fvp["computed_on"] = (
-                "current_run"
-                if sel_meta.get("selected_is_current_run", True)
-                else "committed_vote"
-            )
-            prev_age_min = round(
-                (time.time() - os.path.getmtime(prev_path)) / 60.0, 1
-            )
-            fvp["prev_file"] = os.path.basename(prev_path)
-            # a freshly-written prev snapshot (< ~60 min) means this is
-            # almost certainly a same-session re-run — the ratios then
-            # compare a run against its own round
-            fvp["prev_age_minutes"] = prev_age_min
-            fvp["self_compare_risk"] = prev_age_min < 60.0
-            if skipped:
-                # ADVICE r12: files passed over for sf mismatch (or
-                # unreadability) on the way to the same-sf prev pick
-                fvp["prev_skipped"] = skipped
-            detail["families_vs_prev"] = fvp
-    except (OSError, ValueError, ZeroDivisionError):
-        pass
-    # opt-in scale-smoke trend line (VERDICT r6 task 6): a side script
-    # (scripts/record_scale_smoke.py) runs tests/test_scale_smoke.py
-    # once per round and leaves SCALE_SMOKE.json; embed it so the
-    # driver's own bench run carries the supra-sf0.1 dedup timing
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "SCALE_SMOKE.json")) as fh:
-            detail["scale_smoke"] = json.load(fh)
-    except (OSError, ValueError):
-        pass
-    try:
-        # script-dir path, NOT cwd (ADVICE r11): the auto-extend guard
-        # above reads from the script dir, so write and read must agree
-        # regardless of launch cwd; the file is git-tracked as of r12 so
-        # a fresh checkout still has the previous round's spreads
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_detail.json"), "w") as fh:
-            json.dump(detail, fh)
-    except OSError:
-        pass
-    # the committed artifact carries the SELECTED vote's numbers
-    # (VERDICT r14 task 2) plus the selection metadata itself, so the
-    # judge and the next round's drift math can audit the pick
-    commit_total = round(sum(commit_timings.values()), 3)
+        status = "FAILED" if name in failed else "ok"
+        print(f"# {name}: {times}n {len(r)} {status}", file=sys.stderr)
+        if name not in failed:
+            queries[name] = round(statistics.median(r), 3)
+    print(f"# wall {time.perf_counter() - t_run:.1f}s", file=sys.stderr)
     payload = {
         "metric": "headline_queries_total_runtime",
-        "value": commit_total,
+        "value": round(sum(queries.values()), 3),
         "unit": "sec",
-        "queries": commit_timings,
-        # the SELECTED vote's rep count (None for pre-r15 history
-        # votes that predate per-vote recording), not this run's
-        "reps": commit_reps,
-        # the SELECTED vote's code identity (r16) — audit key for the
-        # cross-vote same-code rule; None for pre-r16 history votes
-        "code_hash": commit_code_hash,
-        "calib_shuffle_probe_sec": commit_calib,
-        # machine-speed-normalized headline: cross-round comparisons
-        # should read THIS (total ÷ the fixed calibration probe) — VM
-        # boots differ ~1.7×, and r5 was judged on a 1.56×-slower host
-        "value_per_calib": round(commit_total / commit_calib, 3)
-        if commit_calib else None,
-        # per-family normalized totals (family time ÷ that family's
-        # bracketing probes) — localizes cross-round drift
-        "families_normalized": commit_fam_norm,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # the core count this run executed with (VERDICT r20 task 3:
-        # the driver's scaling block suspected $SPARK_GRAFT_CPUS was
-        # ignored — make the honored value part of the record)
-        "cpus": int(cpus) if str(cpus).isdigit() else cpus,
-        "selection": sel_meta,
+        "queries": queries,
+        "sf": sf_of(sf_dir),
+        "cpus": cores,
+        "reps": REPS,
+        "code_hash": code_hash,
+        "attempted": len(HEADLINE),
+        "failed": len(failed),
     }
-    if len(json.dumps(payload)) > 1400:
-        # full per-query map won't fit the driver line: preserve it on
-        # stderr before render_stdout_line truncates
-        print(f"# queries_full: {json.dumps(commit_timings)}",
-              file=sys.stderr)
-    print(render_stdout_line(payload))
+    print(render_line(payload))
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -100,12 +100,6 @@ def punct_ratio(text: Column) -> Column:
     )
 
 
-def upper_ratio(text: Column) -> Column:
-    return F.length(F.regexp_replace(text, r"[^A-Z]", "")).cast("double") / F.greatest(
-        F.length(text).cast("double"), F.lit(1.0)
-    )
-
-
 def mean_token_len(text: Column) -> Column:
     t = tokens(text)
     return F.aggregate(t, F.lit(0).cast("long"), lambda a, w: a + F.length(w)).cast(

@@ -173,17 +173,21 @@ def bpe_train(
     LAZY: the next round's argmax job materializes it (the BFS probe
     pattern), so fold rounds stop paying a second job; ``persist``
     keeps the eager pin (``replaces`` bookkeeping requires
-    materialization — see ``pinning.pin``)."""
+    materialization — see ``pinning.pin``).  Each ``persist`` pin
+    releases the one before it, so exactly one pinned frame outlives
+    the call: the latest pin, which the returned ``words`` reads."""
     spark = docs.sparkSession
-    words = pin(word_freq_table(docs, text_col))
+    pinned = pin(word_freq_table(docs, text_col))
     # one tiny job over the just-materialized pin: the row count that
     # sizes the loop's partitioning (data-derived, not core-derived)
-    n_types = words.count()
-    parts = words.rdd.getNumPartitions()
+    n_types = pinned.count()
+    parts = pinned.rdd.getNumPartitions()
     target = max(1, min(parts, n_types // _WORDS_PER_TASK + 1))
-    if target < parts:
-        words = words.coalesce(target)
-    last_pin = words
+    words = pinned.coalesce(target) if target < parts else pinned
+    # the frame the first in-loop pin releases is the pinned one: its
+    # coalesced view was never persisted, so releasing that would leave
+    # the word table in executor storage under ``persist``
+    last_pin = pinned
     lazy_pins = get_pin_strategy() == LOCAL_CHECKPOINT
     merges: list[tuple[int, str, str, str, int]] = []
     conf = spark.conf

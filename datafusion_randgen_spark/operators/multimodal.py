@@ -1,5 +1,5 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata, with decode / feature-extract / resize / frame-sample as
+metadata, with decode / feature-extract / frame-sample as
 Arrow-batched ``mapInPandas`` stages.
 
 The container has no image/audio codecs, so the *decode* step is a
@@ -22,10 +22,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "doc_id long, media binary, media_type string, byte_len long"
-)
 
 FEATURE_SCHEMA = (
     "doc_id long, media_type string, byte_len long, "
@@ -197,17 +193,3 @@ def frame_sample(media_df: DataFrame, every_ms: int = 40) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return media_df.mapInPandas(op, schema=FRAME_SCHEMA)
-
-
-def resize_stub(media_df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize plumbing: passes payloads through mapInPandas and records
-    the target dims (real resize would transform the payload)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[["doc_id", "media", "media_type", "byte_len"]].copy()
-            yield out
-
-    return media_df.mapInPandas(op, schema=MEDIA_SCHEMA).withColumns(
-        {"target_w": F.lit(target_w), "target_h": F.lit(target_h)}
-    )

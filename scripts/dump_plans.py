@@ -7,8 +7,9 @@ Usage:
   python scripts/dump_plans.py <tag> [entry ...]
 
 ``tag`` is typically ``before`` or ``after``.  With no entries named,
-dumps every bench headline entry.  Round is inferred the same way as
-bench.py (CORRECTNESS_rN present without BENCH_rN => round N).
+dumps every entry of ``bench.HEADLINE``.  The session is bench.py's
+(cores from ``$SPARK_GRAFT_CPUS`` or the host, heap from available
+memory).  Round: CORRECTNESS_rN present without BENCH_rN => round N.
 
 NOTE: explain() prints the INITIAL AQE plan (isFinalPlan=false) — join
 strategies AQE rewrites at runtime won't show; Exchange counts,
@@ -32,6 +33,8 @@ if HERE not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
     os.environ["PYTHONPATH"] = (
         HERE + os.pathsep + os.environ.get("PYTHONPATH", "")
     ).rstrip(os.pathsep)
+
+import bench  # noqa: E402
 
 
 def _infer_round() -> int:
@@ -73,77 +76,41 @@ def main() -> None:
         sys.exit(2)
     tag = sys.argv[1]
     only = set(sys.argv[2:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    rnd = _infer_round()
-    out_dir = os.path.join(HERE, "plans", f"r{rnd}")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", bench.DEFAULT_SF_DIR)
+    try:
+        cores = bench.parse_cpus(os.environ.get("SPARK_GRAFT_CPUS"))
+    except ValueError as exc:
+        print(f"dump_plans: {exc}", file=sys.stderr)
+        sys.exit(2)
+    out_dir = os.path.join(HERE, "plans", f"r{_infer_round()}")
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dump_plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import bench as bench_mod  # noqa: F401  (reuse its entry wiring)
-    from datafusion_randgen_spark import add_udfs, queries as cat
-
-    add_udfs(spark)
-
-    # the same headline set bench.py times (keep in sync by importing
-    # the catalog; gen probes are bench-internal and excluded here)
-    names = [
-        "flagship_randgen_graft",
-        "q1_pricing_summary", "q3_topk_revenue", "q5_regional_revenue",
-        "q_window_topk_per_group", "q8_market_share", "q_sessionization",
-        "q_asof_join", "d_exact_dedup", "d_minhash_lsh_pairs",
-        "d_connected_components", "d_embedding_near_dup",
-        "s_ann_bruteforce_topk", "s_ann_ivf_recall", "t_token_stats",
-        "p_training_data_prep", "q_pagerank_transitions",
-        "s_kmeans_embeddings", "d_contamination_check",
-        "q_exact_pctl_histogram", "q_sparse_matmul", "q_bfs_shortest_path",
-        "q_ewma_smoothing", "q_forward_fill_locf", "q_median_impute",
-        "d_simhash_r6", "t_dup_span_coverage", "q_rfm_segmentation",
-        "d_winnowing_fingerprints", "d_exact_substring_spans",
-        "d_semantic_dedup", "d_snapshot_dedup", "t_bpe_merge_vocab",
-        "d_skewed_digest_dedup",
-    ]
+    names = list(bench.HEADLINE)
     if only:
         names = [n for n in names if n in only] + [
             n for n in only if n not in names
         ]
 
-    for name in names:
-        fn = cat.flagship if name == "flagship_randgen_graft" else cat.QUERIES[name]
-        spark.sparkContext.setJobDescription(f"plan:{name}")
-        try:
-            df = fn(spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+    with bench.bench_session(cores) as spark:
+        for name in names:
+            spark.sparkContext.setJobDescription(f"plan:{name}")
+            try:
+                df = bench.entry_fn(name)(spark, sf_dir)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+            except Exception as exc:  # noqa: BLE001
+                plan = f"ERROR building {name}: {exc!r}\n"
+            finally:
+                spark.catalog.clearCache()
+            note = DRIVER_LOOP_NOTE.get(name)
+            header = f"-- {name} @ {sf_dir} ({tag})\n" + (
+                f"-- NOTE: {note}\n" if note else ""
             )
-        except Exception as exc:  # noqa: BLE001
-            plan = f"ERROR building {name}: {exc!r}\n"
-        finally:
-            spark.catalog.clearCache()
-        note = DRIVER_LOOP_NOTE.get(name)
-        header = f"-- {name} @ {sf_dir} ({tag})\n" + (
-            f"-- NOTE: {note}\n" if note else ""
-        )
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
-        with open(path, "w") as fh:
-            fh.write(header + plan)
-        print(f"wrote {path}")
-    spark.stop()
+            path = os.path.join(out_dir, f"{name}_{tag}.txt")
+            with open(path, "w") as fh:
+                fh.write(header + plan)
+            print(f"wrote {path}")
 
 
 if __name__ == "__main__":

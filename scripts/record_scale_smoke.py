@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """Run the opt-in scale smoke suite (tests/test_scale_smoke.py, ~40×
-the sf0.1 fixture) once and record SCALE_SMOKE.json at the repo root —
-bench.py embeds that file into bench_detail.json so every driver bench
-run carries the supra-sf0.1 trend line (VERDICT r6 task 6 / r7 task 4).
+the sf0.1 fixture) once and record SCALE_SMOKE.json at the repo root:
+the supra-sf0.1 dedup trend line.
 
 Run once per round, with no other Spark JVM live:
 

@@ -1,851 +1,45 @@
-"""Unit tests for bench.py's drift/attribution block (VERDICT r12
-task 3 + ADVICE r12 items 1 and 4).
+"""Unit tests for bench.py: the core-count parse, the code hash, the
+seeded pass order, the warm-pass directory, the stdout line, failure
+counting and the plan of the core-scaling probe.
 
-``compute_drift`` was extracted from bench.main() precisely so these
-rules are testable without a SparkSession or real bench files:
-
-- with prev-round history lines carrying per-class family probe
-  baselines (the r12+ shape), probe_ratios use DIRECT per-class
-  ratios and the ``shuffle_inferred`` fallback path is never taken;
-- attribution only credits probe classes PLAUSIBLE for the family
-  (FAM_COST_CLASSES) — an orthogonal-class spike (e.g. pyworker on
-  the JVM-only tpch family) keeps UNATTRIBUTED with a note;
-- ``pick_prev_bench`` falls back to the most recent SAME-SF prev
-  bench instead of aborting on a latest-file sf mismatch.
-
-No Spark fixtures on purpose: bench.py's module level imports are
-stdlib-only, so this file stays runnable in isolation.
+Only the last two need Spark (the shared ``conftest`` session); bench.py
+imports nothing from pyspark at module level.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 
 
-FAM_GROUPS = {"tpch": ["q1", "q3"], "dedup": ["d1"]}
+def test_parse_cpus_defaults_to_host_cores():
+    assert bench.parse_cpus(None) == bench.host_cores()
+    assert bench.parse_cpus("") == bench.host_cores()
+    assert bench.parse_cpus("8") == 8
 
 
-def _fam_probe_from(cur: dict):
-    return lambda cls, fam: cur[cls][fam]
+@pytest.mark.parametrize("value", ["0", "-4", "4.5", "four", "0x10"])
+def test_parse_cpus_rejects_non_positive_or_non_integer(value):
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        bench.parse_cpus(value)
 
 
-def _hist_line(queries, probes, rnd=12, sf=0.1):
-    return {
-        "round": rnd,
-        "sf": sf,
-        "queries": queries,
-        "calib": 0.6,
-        "family_probe_sec": probes,
-    }
+def test_bad_cpus_exits_before_session_start(monkeypatch, capsys):
+    def no_session(*_a, **_k):
+        raise AssertionError("session started despite a bad core count")
 
-
-_FLAT_PROBES = {
-    "shuffle": {"tpch": 0.6, "dedup": 0.6},
-    "pyworker": {"tpch": 0.3, "dedup": 0.3},
-    "driver_loop": {"tpch": 0.6, "dedup": 0.6},
-}
-
-
-def _drift(timings, cur_probes, hist_runs, prev_parsed=None):
-    prev_parsed = prev_parsed or {
-        "sf": 0.1,
-        "families_normalized": {"tpch": 2.0, "dedup": 1.0},
-        "queries": {"q1": 1.0, "q3": 1.0, "d1": 1.0},
-    }
-    families_normalized = {
-        f: round(sum(timings[n] for n in ns) / cur_probes["shuffle"][f], 3)
-        for f, ns in FAM_GROUPS.items()
-    }
-    return bench.compute_drift(
-        fam_groups=FAM_GROUPS,
-        timings=timings,
-        families_normalized=families_normalized,
-        fam_probe=_fam_probe_from(cur_probes),
-        prev_parsed=prev_parsed,
-        prev_round=12,
-        cur_round=13,
-        hist_runs=hist_runs,
-    )
-
-
-def test_direct_probe_ratios_no_inferred_fallback():
-    """VERDICT r12 task 3: prev history carries per-class family probe
-    baselines ⇒ every family gets DIRECT ratios for all three classes
-    and no probe_ratios entry uses the shuffle_inferred fallback."""
-    hist = [
-        _hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES),
-        _hist_line({"q1": 1.2, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES),
-    ]
-    out = _drift(
-        {"q1": 1.0, "q3": 1.0, "d1": 1.0},
-        {
-            "shuffle": {"tpch": 0.66, "dedup": 0.6},
-            "pyworker": {"tpch": 0.3, "dedup": 0.33},
-            "driver_loop": {"tpch": 0.6, "dedup": 0.6},
-        },
-        hist,
-    )
-    assert out["prev_queries_source"] == "history_median_of_2_runs"
-    for fam in FAM_GROUPS:
-        pr = out["probe_ratios"][fam]
-        assert set(pr) == set(bench.PROBE_CLASSES)
-        assert "shuffle_inferred" not in pr
-    assert out["probe_ratios"]["tpch"]["shuffle"] == 1.1
-    assert out["probe_ratios"]["dedup"]["pyworker"] == 1.1
-    # cross-run median: q1 baseline is median(1.0, 1.2) = 1.1
-    assert out["raw_ratios_shared_queries"]["tpch"] == round(2.0 / 2.1, 3)
-
-
-def test_inferred_fallback_only_without_probe_baselines():
-    """Pre-r12 history shape (no family_probe_sec) still degrades to
-    the raw÷normalized shuffle inference — the fallback exists, it is
-    just never taken when direct baselines are present."""
-    hist = [_hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, None)]
-    out = _drift(
-        {"q1": 1.0, "q3": 1.0, "d1": 1.0},
-        _FLAT_PROBES,
-        hist,
-    )
-    for fam in FAM_GROUPS:
-        assert list(out["probe_ratios"][fam]) == ["shuffle_inferred"]
-
-
-def test_attribution_plausible_class_credits():
-    """A dedup move matched by a pyworker probe move IS environment-
-    attributed — pyworker is in dedup's plausible class set."""
-    hist = [_hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES)]
-    out = _drift(
-        {"q1": 1.0, "q3": 1.0, "d1": 1.4},
-        {
-            "shuffle": {"tpch": 0.6, "dedup": 0.6},
-            "pyworker": {"tpch": 0.3, "dedup": 0.42},  # 1.4x
-            "driver_loop": {"tpch": 0.6, "dedup": 0.6},
-        },
-        hist,
-    )
-    assert out["attribution"]["dedup"] == "probe:pyworker"
-    assert out["attribution"]["tpch"] == "within_band"
-
-
-def test_attribution_orthogonal_class_not_credited():
-    """ADVICE r12: a pyworker spike must NOT environment-attribute the
-    JVM-only tpch family — the move stays UNATTRIBUTED with a note
-    naming the ignored orthogonal match."""
-    hist = [_hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES)]
-    out = _drift(
-        {"q1": 1.7, "q3": 1.7, "d1": 1.0},
-        {
-            "shuffle": {"tpch": 0.6, "dedup": 0.6},     # flat
-            "pyworker": {"tpch": 0.51, "dedup": 0.3},   # 1.7x on tpch
-            "driver_loop": {"tpch": 0.6, "dedup": 0.6},
-        },
-        hist,
-    )
-    assert out["attribution"]["tpch"] == (
-        "UNATTRIBUTED_suspect_real_regression"
-    )
-    assert "pyworker" in out["attribution_notes"]["tpch"]
-    assert out["family_cost_classes"]["tpch"] == ["shuffle"]
-
-
-def test_attribution_shuffle_still_credits_tpch():
-    """The restriction must not break the legitimate case: a tpch move
-    matched by the SHUFFLE probe is still environment-attributed."""
-    hist = [_hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES)]
-    out = _drift(
-        {"q1": 1.5, "q3": 1.5, "d1": 1.0},
-        {
-            "shuffle": {"tpch": 0.9, "dedup": 0.6},  # 1.5x on tpch
-            "pyworker": {"tpch": 0.3, "dedup": 0.3},
-            "driver_loop": {"tpch": 0.6, "dedup": 0.6},
-        },
-        hist,
-    )
-    assert out["attribution"]["tpch"] == "probe:shuffle"
-
-
-def test_fam_cost_classes_cover_all_bench_families():
-    """Every family the harness times has an explicit plausible-class
-    declaration, and each declares at least shuffle (all families run
-    JVM jobs)."""
-    for fam in ("gen", "tpch", "events", "dedup", "iterative",
-                "similarity", "text", "scaling"):
-        classes = bench.FAM_COST_CLASSES[fam]
-        assert "shuffle" in classes
-        assert set(classes) <= set(bench.PROBE_CLASSES)
-
-
-def _write_bench(path, sf):
-    with open(path, "w") as fh:
-        json.dump({"parsed": {"sf": sf, "queries": {"q1": 1.0}}}, fh)
-
-
-def test_pick_prev_bench_falls_back_to_same_sf(tmp_path):
-    """ADVICE r12: when the latest prev-round bench is a different sf,
-    the pick walks back to the most recent SAME-SF file instead of
-    disabling the drift comparison."""
-    _write_bench(tmp_path / "BENCH_r10.json", 0.1)
-    _write_bench(tmp_path / "BENCH_r11.json", 0.01)
-    parsed, rnd, path, skipped = bench.pick_prev_bench(
-        str(tmp_path), 12, 0.1
-    )
-    assert rnd == 10
-    assert parsed["sf"] == 0.1
-    assert os.path.basename(path) == "BENCH_r10.json"
-    assert skipped == ["BENCH_r11.json:sf=0.01"]
-
-
-def test_pick_prev_bench_no_same_sf(tmp_path):
-    _write_bench(tmp_path / "BENCH_r11.json", 0.01)
-    parsed, rnd, path, skipped = bench.pick_prev_bench(
-        str(tmp_path), 12, 0.1
-    )
-    assert parsed is None and rnd is None and path is None
-    assert skipped == ["BENCH_r11.json:sf=0.01"]
-
-
-def test_pick_prev_bench_ignores_current_and_future_rounds(tmp_path):
-    _write_bench(tmp_path / "BENCH_r11.json", 0.1)
-    _write_bench(tmp_path / "BENCH_r12.json", 0.1)
-    _write_bench(tmp_path / "BENCH_r13.json", 0.1)
-    parsed, rnd, _path, _ = bench.pick_prev_bench(str(tmp_path), 12, 0.1)
-    assert rnd == 11
-
-
-def test_inferred_attribution_is_marked_approx():
-    """ADVICE r13: an attribution that rests on the shuffle_inferred
-    fallback (pre-r12 history, no direct probe baselines) is labeled
-    distinctly — the inference mixes a cross-run-median numerator with
-    a single committed file's normalized denominator."""
-    hist = [_hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, None)]
-    # dedup runs 1.4x raw; its cur shuffle probe ALSO sits 1.4x so the
-    # normalized ratio stays flat and the inferred shuffle ratio = 1.4
-    out = _drift(
-        {"q1": 1.0, "q3": 1.0, "d1": 1.4},
-        {
-            "shuffle": {"tpch": 0.6, "dedup": 1.4},
-            "pyworker": {"tpch": 0.3, "dedup": 0.3},
-            "driver_loop": {"tpch": 0.6, "dedup": 0.6},
-        },
-        hist,
-    )
-    assert out["probe_ratios"]["dedup"] == {"shuffle_inferred": 1.4}
-    assert out["attribution"]["dedup"] == "probe:shuffle_inferred(approx)"
-
-
-# ---- split_base_extension (VERDICT r13 task 2) ----
-# run index == pass index; base passes are 0..base_reps-1, extension
-# passes run only the extended-rep entries.
-
-def _probes(shuffle_by_pass, n_passes):
-    """probe_samples_by_pass with the given per-pass shuffle samples
-    and flat pyworker/driver_loop."""
-    return {
-        "shuffle": [[v] for v in shuffle_by_pass],
-        "pyworker": [[0.3] for _ in range(n_passes)],
-        "driver_loop": [[0.6] for _ in range(n_passes)],
-    }
-
-
-def test_split_slow_extension_window_attributed():
-    """A slow extension window matched by the family's own probe class
-    is environment-attributed, not silently medianed."""
-    out = bench.split_base_extension(
-        all_runs={"d1": [3.0, 3.1, 3.2, 6.0, 6.2]},
-        base_reps=3,
-        probe_samples_by_pass=_probes([0.6, 0.6, 0.6, 1.2, 1.2], 5),
-        fam_of={"d1": "dedup"},
-    )
-    row = out["d1"]
-    assert row["base_median"] == 3.1
-    assert row["extension_median"] == 6.1
-    assert row["slow_window"] == "extension"
-    assert row["window_attribution"] == "probe:shuffle_extension_window"
-
-
-def test_split_slow_extension_window_unattributed_when_probes_flat():
-    """Flat probes + a divergent extension window => the skew is
-    flagged UNATTRIBUTED (needs the isolated profiler), never hidden."""
-    out = bench.split_base_extension(
-        all_runs={"d1": [3.0, 3.1, 3.2, 6.0, 6.2]},
-        base_reps=3,
-        probe_samples_by_pass=_probes([0.6] * 5, 5),
-        fam_of={"d1": "dedup"},
-    )
-    assert out["d1"]["window_attribution"] == (
-        "UNATTRIBUTED_extension_window_skew"
-    )
-
-
-def test_split_slow_base_window_r13_minhash_shape():
-    """The r13 d_minhash_lsh_pairs shape: BASE passes sampled the slow
-    window, extension passes sat at steady state — the split reports
-    the base side as slow and attributes it when the probe moved
-    commensurately in the base window."""
-    out = bench.split_base_extension(
-        all_runs={"d_mh": [6.0, 6.4, 6.2, 3.0, 3.1, 3.1, 3.0]},
-        base_reps=3,
-        probe_samples_by_pass=_probes(
-            [1.2, 1.2, 1.2, 0.6, 0.6, 0.6, 0.6], 7
-        ),
-        fam_of={"d_mh": "dedup"},
-    )
-    row = out["d_mh"]
-    assert row["slow_window"] == "base"
-    assert row["window_attribution"] == "probe:shuffle_base_window"
-
-
-def test_split_orthogonal_class_not_credited():
-    """The plausible-class restriction applies to window attribution
-    too: a pyworker window move cannot credit a shuffle-only family."""
-    probes = _probes([0.6] * 5, 5)
-    probes["pyworker"] = [[0.3], [0.3], [0.3], [0.6], [0.6]]  # 2x in ext
-    out = bench.split_base_extension(
-        all_runs={"t1": [1.0, 1.0, 1.0, 2.0, 2.0]},
-        base_reps=3,
-        probe_samples_by_pass=probes,
-        fam_of={"t1": "text"},  # plausible: shuffle ONLY
-    )
-    assert out["t1"]["window_attribution"] == (
-        "UNATTRIBUTED_extension_window_skew"
-    )
-
-
-def test_parse_watchlist_rejects_non_numeric_value():
-    """ADVICE r13: profile_watchlist must fail a non-numeric value with
-    the clean usage SystemExit, not a float() traceback."""
-    import importlib.util
-
-    import pytest
-
-    spec = importlib.util.spec_from_file_location(
-        "profile_watchlist",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts", "profile_watchlist.py",
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    assert mod.parse_watchlist(["q3=1.25"]) == {"q3": 1.25}
-    for bad in (["q3=abc"], ["q3"], ["=1.0"]):
-        with pytest.raises(SystemExit, match="expected entry="):
-            mod.parse_watchlist(bad)
-
-
-def test_split_within_band_and_base_only_entries():
-    """Entries without extension passes are omitted; a <=1.25x window
-    divergence is within_band."""
-    out = bench.split_base_extension(
-        all_runs={
-            "base_only": [1.0, 1.0, 1.0],
-            "steady": [1.0, 1.0, 1.0, 1.1, 1.2],
-        },
-        base_reps=3,
-        probe_samples_by_pass=_probes([0.6] * 5, 5),
-        fam_of={"base_only": "tpch", "steady": "dedup"},
-    )
-    assert "base_only" not in out
-    assert out["steady"]["window_attribution"] == "within_band"
-
-
-# --- committed-vote selection (VERDICT r14 task 2) -------------------
-# r14 committed the last vote of an 8-vote series, taken on a degraded
-# evening host, while four clean same-code votes sat in history; the
-# committed file is what the 2x gate and the next round's drift math
-# read, so bench.main now commits the round's median-normalized vote.
-
-
-def _vote(queries, calib):
-    return {"queries": queries, "calib": calib}
-
-
-def test_select_committed_vote_picks_median_of_odd():
-    votes = [
-        _vote({"q1": 1.0}, 1.0),   # normalized 1.0
-        _vote({"q1": 3.0}, 1.0),   # normalized 3.0
-        _vote({"q1": 2.0}, 1.0),   # normalized 2.0  <- median
-    ]
-    sel, meta = bench.select_committed_vote(votes=votes, current=votes[-1])
-    assert meta["selected_vote_index"] == 2
-    assert meta["selected_normalized_total"] == 2.0
-    assert meta["votes_considered"] == 3
-    assert meta["vote_normalized_totals"] == [1.0, 3.0, 2.0]
-    assert sel is votes[2]
-
-
-def test_select_committed_vote_even_count_lower_middle():
-    votes = [
-        _vote({"q1": 4.0}, 1.0),
-        _vote({"q1": 1.0}, 1.0),
-        _vote({"q1": 3.0}, 1.0),
-        _vote({"q1": 2.0}, 1.0),
-    ]
-    sel, meta = bench.select_committed_vote(votes=votes, current=votes[-1])
-    # sorted normalized totals: 1,2,3,4 -> lower-middle = 2.0 (index 3)
-    assert meta["selected_normalized_total"] == 2.0
-    assert meta["selected_vote_index"] == 3
-    assert meta["selected_is_current_run"] is True
-
-
-def test_select_committed_vote_normalizes_by_own_calib():
-    # raw totals say vote 0 is slowest, but its host was 2x slower
-    # (calib 2.0); normalized it is the FASTEST — the selection must
-    # divide each vote by its own probe, not compare raw seconds
-    votes = [
-        _vote({"q1": 4.0}, 2.0),   # normalized 2.0
-        _vote({"q1": 2.5}, 1.0),   # normalized 2.5  <- median
-        _vote({"q1": 3.0}, 1.0),   # normalized 3.0
-    ]
-    sel, meta = bench.select_committed_vote(votes=votes, current=votes[-1])
-    assert meta["selected_vote_index"] == 1
-    assert meta["selected_is_current_run"] is False
-
-
-def test_select_committed_vote_tie_prefers_first_in_file():
-    votes = [
-        _vote({"q1": 2.0}, 1.0),
-        _vote({"q1": 2.0}, 1.0),
-        _vote({"q1": 2.0}, 1.0),
-    ]
-    sel, meta = bench.select_committed_vote(votes=votes, current=votes[-1])
-    # all tied at 2.0: deterministic lower-middle over (value, index)
-    # order -> index 1; equality-based current-run detection still
-    # fires because the selected vote's numbers match the current run's
-    assert meta["selected_vote_index"] == 1
-    assert meta["selected_is_current_run"] is True
-
-
-def test_select_committed_vote_single_vote_is_current():
-    votes = [_vote({"q1": 5.0}, 0.5)]
-    sel, meta = bench.select_committed_vote(votes=votes, current=votes[0])
-    assert meta["selected_vote_index"] == 0
-    assert meta["selected_normalized_total"] == 10.0
-    assert meta["selected_is_current_run"] is True
-
-
-# --- warm-pass era filtering in drift baselines (ADVICE r14) ---------
-# warm-pass-era history lines have systematically lower first-rep
-# medians on heavy-codegen entries; a cross-run median over a
-# mixed-era round can mask a real regression, so compute_drift filters
-# hist_runs to the current run's era and notes it.
-
-
-def _era_drift(hist_runs, cur_warm_pass):
-    timings = {"q1": 1.0, "q3": 1.0, "d1": 1.0}
-    families_normalized = {
-        f: round(sum(timings[n] for n in ns) / _FLAT_PROBES["shuffle"][f], 3)
-        for f, ns in FAM_GROUPS.items()
-    }
-    return bench.compute_drift(
-        fam_groups=FAM_GROUPS,
-        timings=timings,
-        families_normalized=families_normalized,
-        fam_probe=_fam_probe_from(_FLAT_PROBES),
-        prev_parsed={
-            "sf": 0.1,
-            "families_normalized": {"tpch": 2.0, "dedup": 1.0},
-            "queries": {"q1": 1.0, "q3": 1.0, "d1": 1.0},
-        },
-        prev_round=12,
-        cur_round=13,
-        hist_runs=hist_runs,
-        cur_warm_pass=cur_warm_pass,
-    )
-
-
-def test_mixed_era_hist_filtered_to_current_era():
-    warm = _hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES)
-    warm["warm_pass"] = True
-    cold = _hist_line({"q1": 100.0, "q3": 100.0, "d1": 100.0}, _FLAT_PROBES)
-    # (no warm_pass key == pre-warm-pass era)
-    out = _era_drift([cold, warm], cur_warm_pass=True)
-    # only the warm line feeds the baseline: prev q1+q3 = 2.0, not the
-    # mixed-era median of (1,100)
-    assert out["raw_ratios_shared_queries"]["tpch"] == 1.0
-    assert out["prev_n_runs"] == 1
-    assert out["hist_era_note"].startswith("hist_runs era-filtered")
-    assert out["attribution_notes"]["_hist_era"] == out["hist_era_note"]
-
-
-def test_single_era_hist_not_filtered_no_note():
-    warm1 = _hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES)
-    warm1["warm_pass"] = True
-    warm2 = _hist_line({"q1": 2.0, "q3": 2.0, "d1": 2.0}, _FLAT_PROBES)
-    warm2["warm_pass"] = True
-    out = _era_drift([warm1, warm2], cur_warm_pass=True)
-    assert out["prev_n_runs"] == 2
-    assert "hist_era_note" not in out
-
-
-def test_era_filter_off_when_current_era_unknown():
-    warm = _hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES)
-    warm["warm_pass"] = True
-    cold = _hist_line({"q1": 3.0, "q3": 3.0, "d1": 3.0}, _FLAT_PROBES)
-    out = _era_drift([cold, warm], cur_warm_pass=None)
-    # legacy/unknown-era callers keep the old mixed-median behavior
-    assert out["prev_n_runs"] == 2
-    assert "hist_era_note" not in out
-
-
-def _write_hist(tmp_path, lines):
-    p = tmp_path / "BENCH_HISTORY.jsonl"
-    p.write_text("\n".join(json.dumps(e) for e in lines) + "\n")
-    return str(p)
-
-
-def test_collect_round_votes_filters_round_sf_era_and_query_set(tmp_path):
-    ok = {"round": 15, "sf": 0.1, "queries": {"q1": 1.0}, "calib": 0.8,
-          "warm_pass": True}
-    lines = [
-        ok,
-        {**ok, "round": 14},                       # other round
-        {**ok, "sf": 0.01},                        # other sf
-        {**ok, "warm_pass": False},                # other era
-        dict(ok, warm_pass=None),                  # era None == False
-        {**ok, "queries": {"q1": 1.0, "q2": 2.0}},  # entry-set mismatch
-        {**ok, "queries": {}},                     # empty queries
-        {"round": 15},                             # malformed-ish
-    ]
-    path = _write_hist(tmp_path, lines)
-    votes, mismatched, hash_mismatched = bench.collect_round_votes(
-        path, 15, 0.1, True, {"q1"}
-    )
-    assert len(votes) == 1 and votes[0]["calib"] == 0.8
-    assert mismatched == 1  # only the {q1,q2} vote counts as mismatch
-    assert hash_mismatched == 0
-
-
-def test_collect_round_votes_era_none_matches_cold(tmp_path):
-    # pre-warm-pass lines lack the key entirely; bool(None) == False
-    cold = {"round": 15, "sf": 0.1, "queries": {"q1": 2.0}, "calib": 0.7}
-    path = _write_hist(tmp_path, [cold])
-    votes, _, _ = bench.collect_round_votes(path, 15, 0.1, False, {"q1"})
-    assert len(votes) == 1
-
-
-def test_collect_round_votes_missing_file_and_bad_json(tmp_path):
-    votes, mismatched, hash_mismatched = bench.collect_round_votes(
-        str(tmp_path / "absent.jsonl"), 15, 0.1, True, {"q1"}
-    )
-    assert votes == [] and mismatched == 0 and hash_mismatched == 0
-    p = tmp_path / "BENCH_HISTORY.jsonl"
-    p.write_text("not json\n" + json.dumps(
-        {"round": 15, "sf": 0.1, "queries": {"q1": 1.0}, "calib": 0.5,
-         "warm_pass": True}) + "\n")
-    votes, _, _ = bench.collect_round_votes(str(p), 15, 0.1, True, {"q1"})
-    assert len(votes) == 1  # bad line skipped, good line kept
-
-
-def test_collect_round_votes_code_hash_filter(tmp_path):
-    # ADVICE r15: a vote recorded on DIFFERENT code is excluded (and
-    # counted); votes without the key (pre-r16 lines) still pass for
-    # selection — the strict filter lives in compute_drift's downgrade
-    ok = {"round": 16, "sf": 0.1, "queries": {"q1": 1.0}, "calib": 0.8,
-          "warm_pass": True, "code_hash": "aaaabbbbcccc"}
-    lines = [
-        ok,
-        {**ok, "code_hash": "ddddeeeeffff"},   # different code: excluded
-        {k: v for k, v in ok.items() if k != "code_hash"},  # legacy: kept
-    ]
-    path = _write_hist(tmp_path, lines)
-    votes, _, hash_mismatched = bench.collect_round_votes(
-        path, 16, 0.1, True, {"q1"}, code_hash="aaaabbbbcccc"
-    )
-    assert len(votes) == 2
-    assert hash_mismatched == 1
-    # no code_hash given (legacy caller): nothing excluded
-    votes, _, hash_mismatched = bench.collect_round_votes(
-        path, 16, 0.1, True, {"q1"}
-    )
-    assert len(votes) == 3 and hash_mismatched == 0
-
-
-# --- warm-pass marker + warm-dir default (ADVICE r14 items) -----------
-
-
-def test_warm_marker_true_when_all_entries_warmed():
-    assert bench.warm_marker_effective(36, 0) is True
-
-
-def test_warm_marker_false_when_most_entries_failed():
-    # warm dir exists but holds no usable parquet: nearly every entry
-    # raises, first reps are codegen-cold, marker must say so
-    assert bench.warm_marker_effective(2, 34) is False
-
-
-def test_warm_marker_boundary_half_ok_counts_as_effective():
-    assert bench.warm_marker_effective(18, 18) is True
-    assert bench.warm_marker_effective(17, 19) is False
-
-
-def test_warm_marker_strict_majority_failure_is_ineffective():
-    # odd totals: 17 ok / 18 failed is a MAJORITY failure — floor
-    # division called this effective (ceil rule, code-review r15)
-    assert bench.warm_marker_effective(17, 18) is False
-    assert bench.warm_marker_effective(18, 17) is True
-    assert bench.warm_marker_effective(1, 2) is False
-
-
-def test_warm_marker_zero_ok_never_effective():
-    assert bench.warm_marker_effective(0, 0) is False
-    assert bench.warm_marker_effective(0, 5) is False
-
-
-def test_default_warm_dir_is_sibling_sf0001():
-    assert bench.default_warm_dir("/root/testdata/sf0.1") == \
-        "/root/testdata/sf0.001"
-    # trailing slash must not shift the parent up a level
-    assert bench.default_warm_dir("/root/testdata/sf0.1/") == \
-        "/root/testdata/sf0.001"
-
-
-def test_default_warm_dir_relative_sf_dir_resolves_absolute():
-    out = bench.default_warm_dir("testdata/sf0.1")
-    assert os.path.isabs(out) and out.endswith("/sf0.001")
-
-
-# --- driver stdout line rendering (size-capped, degrade gracefully) ---
-
-
-def _payload(n_queries, n_votes):
-    # realistic entry-name lengths (bench names run 12-26 chars, e.g.
-    # d_connected_components) — the cap math depends on them
-    qs = {f"q_realistic_entry_name_{i:02d}": round(0.5 + i * 0.137, 3)
-          for i in range(n_queries)}
-    sel = {
-        "rule": "median_normalized_total_over_round_votes",
-        "votes_considered": n_votes,
-        "vote_normalized_totals": [round(80 + i * 3.17, 3)
-                                   for i in range(n_votes)],
-        "selected_vote_index": n_votes // 2,
-        "selected_normalized_total": 89.27,
-        "selected_is_current_run": False,
-    }
-    payload = {
-        "metric": "headline_queries_total_runtime",
-        "value": round(sum(qs.values()), 3),
-        "unit": "sec",
-        "queries": qs,
-        "reps": 3,
-        "calib_shuffle_probe_sec": 0.869,
-        "value_per_calib": 86.076,
-        "families_normalized": {"gen": 2.5, "tpch": 10.3, "events": 16.0,
-                                "dedup": 26.1, "iterative": 19.1,
-                                "similarity": 3.0, "text": 4.5},
-        "sf": 0.1,
-        "selection": sel,
-    }
-    return payload, sel, qs
-
-
-def test_render_small_payload_untouched():
-    payload, sel, qs = _payload(10, 3)
-    out = json.loads(bench.render_stdout_line(payload))
-    assert out["queries"] == qs
-    assert out["selection"] == sel  # full selection incl. vote totals
-    assert "queries_truncated_to_slowest" not in out
-
-
-def test_render_slims_selection_before_truncating_queries():
-    # realistic r15 shape: 36 entries + a 7-vote selection blows 1400;
-    # the vote-totals list must go BEFORE any query timing does
-    payload, sel, qs = _payload(36, 7)
-    assert len(json.dumps(payload)) > 1400
-    out = json.loads(bench.render_stdout_line(payload))
-    assert "vote_normalized_totals" not in out["selection"]
-    assert out["selection"]["votes_considered"] == 7
-    # slimming buys back query slots: strictly more than the old
-    # fixed keep=20, and every kept entry is from the slowest side
-    kept = out.get("queries_truncated_to_slowest", len(out["queries"]))
-    assert kept > 20
-    slowest = sorted(qs.values(), reverse=True)[:kept]
-    assert sorted(out["queries"].values(), reverse=True) == slowest
-
-
-def test_render_line_always_under_hard_cap():
-    for n_q, n_v in [(10, 1), (36, 7), (36, 40), (120, 12)]:
-        payload, sel, qs = _payload(n_q, n_v)
-        line = bench.render_stdout_line(payload)
-        assert len(line) < 1500, (n_q, n_v, len(line))
-        json.loads(line)  # stays valid JSON
-
-
-def test_render_does_not_mutate_caller_payload():
-    payload, sel, qs = _payload(36, 7)
-    before = json.dumps(payload)
-    bench.render_stdout_line(payload)
-    assert json.dumps(payload) == before
-
-
-# --- cross-vote attribution of committed-vote one-offs (r15; code-
-# hash-verified + calib-normalized since r16, ADVICE r15) --------------
-
-_HASH = "aaaabbbbcccc"
-
-
-def _cv_vote(queries, code_hash=_HASH, calib=0.6):
-    # default calib matches _hist_line's 0.6 so the normalized ratio
-    # equals the raw one unless a test varies host speed on purpose
-    return {"round": 15, "sf": 0.1, "queries": queries, "calib": calib,
-            "warm_pass": True, "reps": 3, "code_hash": code_hash}
-
-
-def _drift_with_votes(timings, round_votes, cur_code_hash=_HASH,
-                      hist=None):
-    # flat probes: nothing for probe-based attribution to credit, so a
-    # >1.25x family reaches the cross-vote check
-    if hist is None:
-        hist = [_hist_line({"q1": 1.0, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES)]
-    families_normalized = {
-        f: round(sum(timings[n] for n in ns) / 0.6, 3)
-        for f, ns in FAM_GROUPS.items()
-    }
-    return bench.compute_drift(
-        fam_groups=FAM_GROUPS,
-        timings=timings,
-        families_normalized=families_normalized,
-        fam_probe=_fam_probe_from(_FLAT_PROBES),
-        prev_parsed={"sf": 0.1,
-                     "families_normalized": {"tpch": 2.0, "dedup": 1.0},
-                     "queries": {"q1": 1.0, "q3": 1.0, "d1": 1.0}},
-        prev_round=12,
-        cur_round=13,
-        hist_runs=hist,
-        round_votes=round_votes,
-        cur_code_hash=cur_code_hash,
-    )
-
-
-def test_round_votes_median_absorbs_committed_one_off():
-    # the committed vote carries a one-off q1=1.8 (family 1.4x), but
-    # the round's other same-hash votes sit at baseline: cross-vote
-    # median over >=3 verified votes is within band -> attributed
-    committed = {"q1": 1.8, "q3": 1.0, "d1": 1.0}
-    votes = [_cv_vote({"q1": 1.0, "q3": 1.0, "d1": 1.0}),
-             _cv_vote({"q1": 1.1, "q3": 1.0, "d1": 1.0}),
-             _cv_vote(committed)]
-    out = _drift_with_votes(committed, votes)
-    assert out["attribution"]["tpch"] == "round_votes:median_within_band"
-    assert "code-hash-verified" in out["attribution_notes"]["tpch"]
-
-
-def test_round_votes_reproducing_regression_stays_unattributed():
-    # every vote shows the same elevated family: the cross-vote median
-    # breaches the band too — the flag must survive
-    elevated = {"q1": 1.8, "q3": 1.0, "d1": 1.0}
-    votes = [_cv_vote(dict(elevated)) for _ in range(4)]
-    out = _drift_with_votes(elevated, votes)
-    assert out["attribution"]["tpch"] == (
-        "UNATTRIBUTED_suspect_real_regression"
-    )
-
-
-def test_round_votes_fewer_than_three_no_downgrade():
-    committed = {"q1": 1.8, "q3": 1.0, "d1": 1.0}
-    votes = [_cv_vote({"q1": 1.0, "q3": 1.0, "d1": 1.0}), _cv_vote(committed)]
-    out = _drift_with_votes(committed, votes)
-    assert out["attribution"]["tpch"] == (
-        "UNATTRIBUTED_suspect_real_regression"
-    )
-
-
-def test_round_votes_missing_entry_votes_excluded_from_median():
-    # votes that never ran a shared query can't vouch for it
-    committed = {"q1": 1.8, "q3": 1.0, "d1": 1.0}
-    votes = [_cv_vote({"q3": 1.0, "d1": 1.0}),          # no q1: excluded
-             _cv_vote({"q3": 1.0, "d1": 1.0}),          # no q1: excluded
-             _cv_vote(committed)]
-    out = _drift_with_votes(committed, votes)
-    assert out["attribution"]["tpch"] == (
-        "UNATTRIBUTED_suspect_real_regression"
-    )
-
-
-def test_round_votes_unhashed_votes_note_but_no_downgrade():
-    # ADVICE r15 (medium): nothing verified the votes ran the same
-    # code — pre-r16 lines without code_hash may only contribute
-    # EVIDENCE (an attribution_note), never flip the flag
-    committed = {"q1": 1.8, "q3": 1.0, "d1": 1.0}
-    votes = [_cv_vote({"q1": 1.0, "q3": 1.0, "d1": 1.0}, code_hash=None),
-             _cv_vote({"q1": 1.1, "q3": 1.0, "d1": 1.0}, code_hash=None),
-             _cv_vote(committed, code_hash=None)]
-    for v in votes:
-        del v["code_hash"]
-    out = _drift_with_votes(committed, votes)
-    assert out["attribution"]["tpch"] == (
-        "UNATTRIBUTED_suspect_real_regression"
-    )
-    assert "UNVERIFIED" in out["attribution_notes"]["tpch"]
-    assert "human adjudication" in out["attribution_notes"]["tpch"]
-
-
-def test_round_votes_wrong_hash_votes_do_not_downgrade():
-    # votes from a different code state are not the same experiment
-    committed = {"q1": 1.8, "q3": 1.0, "d1": 1.0}
-    votes = [_cv_vote({"q1": 1.0, "q3": 1.0, "d1": 1.0}, code_hash="x" * 12),
-             _cv_vote({"q1": 1.1, "q3": 1.0, "d1": 1.0}, code_hash="x" * 12),
-             _cv_vote(committed)]
-    out = _drift_with_votes(committed, votes)
-    assert out["attribution"]["tpch"] == (
-        "UNATTRIBUTED_suspect_real_regression"
-    )
-
-
-def test_round_votes_median_is_calib_normalized():
-    # ADVICE r15 (low): a fast host window across the round's votes
-    # must not mask a real regression.  Raw sums of the other votes
-    # (q1+q3 = 1.44+1.0 = 2.44 vs prev 2.0 -> 1.22x raw, within band)
-    # but each ran on a 2x-faster host (calib 0.3 vs prev 0.6):
-    # normalized ratio = (2.44/0.3) / (2.0/0.6) = 2.44x -> the
-    # downgrade must NOT fire
-    committed = {"q1": 1.8, "q3": 1.0, "d1": 1.0}
-    fast_host = {"q1": 1.44, "q3": 1.0, "d1": 1.0}
-    votes = [_cv_vote(dict(fast_host), calib=0.3),
-             _cv_vote(dict(fast_host), calib=0.3),
-             _cv_vote(committed, calib=0.3)]
-    out = _drift_with_votes(committed, votes)
-    assert out["attribution"]["tpch"] == (
-        "UNATTRIBUTED_suspect_real_regression"
-    )
-    # same votes at the prev round's host speed (calib 0.6): the
-    # normalized median is 1.22x -> downgrade fires
-    votes = [_cv_vote(dict(fast_host), calib=0.6),
-             _cv_vote(dict(fast_host), calib=0.6),
-             _cv_vote(committed, calib=0.6)]
-    out = _drift_with_votes(committed, votes)
-    assert out["attribution"]["tpch"] == "round_votes:median_within_band"
-    assert "normalized median" in out["attribution_notes"]["tpch"]
-
-
-def test_round_votes_raw_fallback_without_prev_calib():
-    # prev history lines without calib: normalization impossible —
-    # fall back to raw sums and SAY so in the note
-    committed = {"q1": 1.8, "q3": 1.0, "d1": 1.0}
-    hist = [{k: v for k, v in _hist_line(
-        {"q1": 1.0, "q3": 1.0, "d1": 1.0}, _FLAT_PROBES).items()
-        if k != "calib"}]
-    votes = [_cv_vote({"q1": 1.0, "q3": 1.0, "d1": 1.0}),
-             _cv_vote({"q1": 1.1, "q3": 1.0, "d1": 1.0}),
-             _cv_vote(committed)]
-    out = _drift_with_votes(committed, votes, hist=hist)
-    assert out["attribution"]["tpch"] == "round_votes:median_within_band"
-    assert "raw_fallback" in out["attribution_notes"]["tpch"]
-
-
-def test_round_votes_within_band_family_untouched():
-    committed = {"q1": 1.0, "q3": 1.0, "d1": 1.0}
-    votes = [_cv_vote(dict(committed)) for _ in range(3)]
-    out = _drift_with_votes(committed, votes)
-    assert out["attribution"]["tpch"] == "within_band"
-
-# --- r16: code hash, seeded pass shuffle, isolated medians ------------
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "0")
+    monkeypatch.setattr(bench, "build_session", no_session)
+    assert bench.main() == 2
+    assert "SPARK_GRAFT_CPUS" in capsys.readouterr().err
 
 
 def test_compute_code_hash_stable_and_sensitive(tmp_path):
@@ -886,211 +80,100 @@ def test_compute_code_hash_unreadable_never_matches(tmp_path):
 
 
 def test_compute_code_hash_surfaces_unreadable_paths(tmp_path, capsys):
-    # ADVICE r17: a salted hash must be diagnosable as an I/O problem —
-    # the unreadable relpath is appended to the caller's list and
-    # warned to stderr; a clean tree leaves the list empty.
+    # a salted hash must be diagnosable as an I/O problem, not read as
+    # a code edit: the unreadable relpath is warned to stderr, and a
+    # clean tree warns nothing
     pkg = tmp_path / "datafusion_randgen_spark"
     pkg.mkdir()
     (pkg / "__init__.py").write_text("x = 1\n")
     (tmp_path / "bench.py").write_text("# harness\n")
-    clean: list = []
-    bench.compute_code_hash(str(tmp_path), clean)
-    assert clean == []
+    bench.compute_code_hash(str(tmp_path))
+    assert capsys.readouterr().err == ""
     (pkg / "broken.py").mkdir()  # glob-matches, open() raises
-    bad: list = []
-    bench.compute_code_hash(str(tmp_path), bad)
-    assert bad == [os.path.join("datafusion_randgen_spark", "broken.py")]
+    bench.compute_code_hash(str(tmp_path))
     err = capsys.readouterr().err
-    assert "unreadable source" in err and "broken.py" in err
+    rel = os.path.join("datafusion_randgen_spark", "broken.py")
+    assert "unreadable source" in err and rel in err
 
 
 def test_shuffled_pass_order_deterministic_and_complete():
-    fam_groups = {"a": ["a1", "a2", "a3"], "b": ["b1"], "c": ["c1", "c2"]}
-    fams = list(fam_groups)
-    o1 = bench.shuffled_pass_order(fams, fam_groups, 16, 0)
-    o2 = bench.shuffled_pass_order(fams, fam_groups, 16, 0)
-    assert o1 == o2  # deterministic for (seed, pass)
-    # every family exactly once, every entry exactly once in its family
-    assert sorted(f for f, _ in o1) == sorted(fams)
-    for fam, names in o1:
-        assert sorted(names) == sorted(fam_groups[fam])
+    names = ["a1", "a2", "a3", "b1", "c1", "c2"]
+    o1 = bench.shuffled_pass_order(names, 16, 0)
+    assert o1 == bench.shuffled_pass_order(names, 16, 0)
+    assert sorted(o1) == sorted(names)  # every entry exactly once
 
 
 def test_shuffled_pass_order_varies_across_passes():
     # the whole point: consecutive passes must not share a fixed order
-    fam_groups = {f"f{i}": [f"f{i}_a", f"f{i}_b"] for i in range(7)}
-    fams = list(fam_groups)
     orders = [
-        bench.shuffled_pass_order(fams, fam_groups, 16, p)
-        for p in range(7)
+        bench.shuffled_pass_order(bench.HEADLINE, 16, p) for p in range(3)
     ]
     assert len({json.dumps(o) for o in orders}) > 1
 
 
-def test_load_isolated_medians_latest_line_wins(tmp_path):
-    p = tmp_path / "PROFILE_HISTORY.jsonl"
-    p.write_text(
-        json.dumps({"reps": 8, "round": 15, "entries": {
-            "d_minhash_lsh_pairs": {"median": 3.1},
-            "not_a_bench_entry": {"median": 9.9},
-        }}) + "\n" +
-        "corrupt line\n" +
-        json.dumps({"reps": 8, "round": 16, "entries": {
-            "d_minhash_lsh_pairs": {"median": 2.9},
-        }}) + "\n"
-    )
-    out = bench.load_isolated_medians(
-        str(p), {"d_minhash_lsh_pairs", "q1_pricing_summary"}
-    )
-    assert out == {"d_minhash_lsh_pairs": {
-        "isolated_median": 2.9, "isolated_reps": 8, "recorded_round": 16,
-        "sf": "",
-    }}
-    # missing file: empty, no raise
-    assert bench.load_isolated_medians(str(tmp_path / "absent"), {"x"}) == {}
+def test_default_warm_dir_is_sibling_sf0001():
+    assert bench.default_warm_dir("/data/sf0.1") == \
+        "/data/sf0.001"
+    # trailing slash must not shift the parent up a level
+    assert bench.default_warm_dir("/data/sf0.1/") == \
+        "/data/sf0.001"
 
 
-def test_load_isolated_medians_filters_by_sf(tmp_path):
-    # self-review r16: an sf0.1 isolated median is not context for an
-    # sf0.001 windowed median — lines at another sf are skipped
-    p = tmp_path / "PROFILE_HISTORY.jsonl"
-    p.write_text(
-        json.dumps({"sf_dir": "/root/testdata/sf0.1", "reps": 8,
-                    "round": 15, "entries": {"e1": {"median": 4.25}}})
-        + "\n" +
-        json.dumps({"sf_dir": "/data/sf0.001", "reps": 8, "round": 16,
-                    "entries": {"e1": {"median": 0.05}}}) + "\n"
-    )
-    out = bench.load_isolated_medians(str(p), {"e1"}, sf="0.1")
-    assert out["e1"]["isolated_median"] == 4.25
-    assert out["e1"]["sf"] == "0.1"
-    out = bench.load_isolated_medians(str(p), {"e1"}, sf="0.001")
-    assert out["e1"]["isolated_median"] == 0.05
-    # an sf with no matching lines yields nothing rather than wrong
-    # -scale context
-    assert bench.load_isolated_medians(str(p), {"e1"}, sf="1.0") == {}
+def test_default_warm_dir_relative_sf_dir_resolves_absolute():
+    out = bench.default_warm_dir("testdata/sf0.1")
+    assert os.path.isabs(out) and out.endswith("/sf0.001")
 
 
-def test_load_isolated_medians_numeric_only(tmp_path):
-    # ADVICE r16: a legitimate 0.0 median must survive (truthiness
-    # dropped it) and non-numeric / bool junk must be skipped, not
-    # passed through into bench_detail.json
-    p = tmp_path / "PROFILE_HISTORY.jsonl"
-    p.write_text(
-        json.dumps({"reps": 8, "round": 17, "entries": {
-            "zero": {"median": 0.0},
-            "junk_str": {"median": "3.1"},
-            "junk_bool": {"median": True},
-            "junk_none": {"median": None},
-        }}) + "\n"
-    )
-    out = bench.load_isolated_medians(
-        str(p), {"zero", "junk_str", "junk_bool", "junk_none"}
-    )
-    assert set(out) == {"zero"}
-    assert out["zero"]["isolated_median"] == 0.0
+def test_headline_names_resolve_to_builders():
+    assert len(bench.HEADLINE) == 37
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+    for name in bench.HEADLINE:
+        assert callable(bench.entry_fn(name)), name
 
 
-def test_render_truncation_notes_full_map_location():
-    payload, sel, qs = _payload(36, 7)
-    out = json.loads(bench.render_stdout_line(payload))
-    assert out.get("queries_truncated_to_slowest")
-    assert out["queries_full_in"] == "bench_detail.json:queries_median"
+def test_line_with_every_headline_median_fits_cap():
+    payload = {
+        "metric": "headline_queries_total_runtime",
+        "value": 99999.999,
+        "unit": "sec",
+        "queries": {n: 999.999 for n in bench.HEADLINE},
+        "sf": 0.001,
+        "cpus": 1024,
+        "reps": bench.REPS,
+        "code_hash": "0123456789ab",
+        "attempted": 37,
+        "failed": 37,
+    }
+    line = bench.render_line(payload)
+    assert json.loads(line) == payload
+    payload["queries"]["x" * bench.LINE_CAP] = 1.0
+    with pytest.raises(ValueError, match="cap"):
+        bench.render_line(payload)
 
 
-def _pad_to_window(payload, target):
-    """Pad a non-query field so the un-truncated line lands just past
-    ``target`` chars — puts truncation pressure exactly where the test
-    wants it regardless of incidental payload-size drift."""
-    payload["padding"] = ""
-    base = len(json.dumps(payload))
-    payload["padding"] = "z" * max(0, target - base)
-    return payload
+def test_run_passes_records_failures_and_keeps_going(spark, capsys):
+    calls = []
+
+    def broken(_spark, _sf_dir):
+        calls.append(1)
+        raise RuntimeError("entry is broken")
+
+    fns = {"ok": lambda s, _d: s.range(10), "bad": broken}
+    runs, failed = bench.run_passes(spark, fns, "unused", reps=2, seed=16)
+    assert failed == ["bad"] and len(calls) == 1  # not run again
+    assert runs["bad"] == [] and len(runs["ok"]) == 2
+    err = capsys.readouterr().err
+    assert "FAILED bad" in err and "entry is broken" in err
 
 
-def test_render_small_query_map_degrades_one_at_a_time():
-    # ADVICE r15: a <=5-entry map used to skip truncation entirely and
-    # could print a >1400-char line; with pressure that leaves room
-    # for SOME entries, a 4-entry map must keep the MAXIMAL slowest-k
-    # prefix under the cap instead of jumping to the drop-everything
-    # fallback.  Entry names are long enough that shedding one buys
-    # more than the truncation-marker overhead costs.
-    payload, _sel, _qs = _payload(4, 3)
-    qs = {f"q_{'entry' * 14}_{i}": round(1.0 + i * 0.1, 3)
-          for i in range(4)}
-    payload["queries"] = dict(qs)
-    _pad_to_window(payload, 1480)
-    line = bench.render_stdout_line(payload)
-    assert len(line) <= 1400
-    out = json.loads(line)
-    kept = out.get("queries_truncated_to_slowest")
-    assert kept and 1 <= kept < 4  # partial map survives
-    assert out["queries_full_in"] == "bench_detail.json:queries_median"
-    by_slow = sorted(qs.items(), key=lambda kv: -kv[1])
-    assert out["queries"] == dict(by_slow[:kept])
-    # maximality: keeping one more entry would break the cap
-    bigger = dict(out)
-    bigger["queries"] = dict(by_slow[:kept + 1])
-    bigger["queries_truncated_to_slowest"] = kept + 1
-    assert len(json.dumps(bigger)) > 1400
-
-
-def test_render_pressure_beyond_queries_drops_them_but_keeps_pointer():
-    # pressure bigger than the whole query map: queries go, the
-    # pointer to the full map stays (it fits once the map is gone)
-    payload, sel, qs = _payload(4, 3)
-    _pad_to_window(payload, 1520)
-    line = bench.render_stdout_line(payload)
-    assert len(line) <= 1400
-    out = json.loads(line)
-    assert "queries" not in out
-    assert out["queries_full_in"] == "bench_detail.json:queries_median"
-
-
-def test_render_oversized_without_queries_adds_no_pointer():
-    # self-review r16: a payload whose NON-query fields alone blow the
-    # cap must not grow further, and a payload that never carried
-    # queries must not imply truncation via a pointer
-    payload, sel, qs = _payload(4, 3)
-    del payload["queries"]
-    _pad_to_window(payload, 1500)
-    line = bench.render_stdout_line(payload)
-    out = json.loads(line)
-    assert "queries_full_in" not in out
-    # no-room corner: queries existed but even the query-less line is
-    # over the cap — the pointer must not be appended on top
-    payload2, _s, _q = _payload(4, 3)
-    _pad_to_window(payload2, 1700)
-    line2 = bench.render_stdout_line(payload2)
-    out2 = json.loads(line2)
-    assert "queries" not in out2 and "queries_full_in" not in out2
-    assert len(line2) < 1700
-
-
-def test_profile_watchlist_infer_round(tmp_path, monkeypatch):
-    # scripts/profile_watchlist._infer_round mirrors bench.main()'s
-    # inline round inference (duplicated on purpose — bench.py is part
-    # of the per-vote code_hash, see the helper's docstring)
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "profile_watchlist",
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "scripts", "profile_watchlist.py"),
-    )
-    pw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pw)
-    monkeypatch.setattr(pw, "HERE", str(tmp_path))
-    # no artifacts at all: round 1
-    assert pw._infer_round() == 1
-    # CORRECTNESS_r05 present, BENCH_r05 absent: we ARE round 5
-    (tmp_path / "CORRECTNESS_r05.json").write_text("{}")
-    assert pw._infer_round() == 5
-    # BENCH_r05 lands: round 5 fully recorded -> this is round 6
-    (tmp_path / "BENCH_r05.json").write_text("{}")
-    assert pw._infer_round() == 6
-    # unpadded BENCH filename also counts
-    (tmp_path / "CORRECTNESS_r06.json").write_text("{}")
-    assert pw._infer_round() == 6
-    (tmp_path / "BENCH_r6.json").write_text("{}")
-    assert pw._infer_round() == 7
+def test_cpu_scaling_probe_groups_on_hash_chain(spark):
+    """The probe's work must survive the optimizer: the top of its plan
+    is an aggregate grouped on pmod(<24 chained xxhash64>, 64)."""
+    df = bench.cpu_scaling_probe(spark, None)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    agg = plan.splitlines()[0]
+    assert agg.startswith("Aggregate [") and "count(1)" in agg
+    key = re.search(r"pmod\((.*), 64\) AS (_groupingexpression#\d+L?)", plan)
+    assert key, plan
+    assert agg.startswith(f"Aggregate [{key.group(2)}]")
+    assert key.group(1).count("xxhash64(") == 24

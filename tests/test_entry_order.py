@@ -2,8 +2,8 @@
 
 The round driver verifies only the first ~50 entries of ``queries()``,
 so ordering IS the correctness-coverage policy: red rows retry first,
-never-attempted LLM-pipeline families fill the window, past greens
-rotate to the back.  (No Spark session needed — pure ordering.)
+never-attempted entries fill the window, past greens rotate to the
+back.  (No Spark session needed — pure ordering.)
 """
 
 from __future__ import annotations
@@ -35,17 +35,3 @@ def test_red_rows_retry_first_and_greens_rotate_back():
     greens_in_window = window & verified
     assert not greens_in_window or len(unattempted) + len(reds) < WINDOW
 
-
-def test_pipeline_families_reach_window_before_generic_sql():
-    verified, attempted, _ = entry_mod._past_results()
-    ordered = list(entry_mod.queries())
-    fam = [
-        n
-        for n in ordered
-        if n not in verified
-        and n.startswith(("d_", "s_", "t_", "p_", "m_", "st_"))
-    ]
-    window = set(ordered[:WINDOW])
-    if len(fam) <= WINDOW:
-        missing = [n for n in fam if n not in window]
-        assert not missing, f"pipeline entries outside window: {missing}"

@@ -1243,6 +1243,36 @@ def test_bfs_terminal_pin_released_under_persist(spark, max_hops):
     assert got == expect
 
 
+def test_bpe_coalesced_word_table_pin_released_under_persist(spark):
+    """Under persist, bpe_train must leave exactly ONE pinned frame —
+    the latest in-loop pin, which the returned words read — also when
+    the word table is coalesced (target < parts).  The coalesced view
+    was never persisted, so releasing it instead of the pinned table
+    left the word-frequency pin in executor storage for the session."""
+    from datafusion_randgen_spark.operators import bpe
+    from datafusion_randgen_spark.pinning import pin, pin_strategy, unpin
+
+    docs = spark.createDataFrame(
+        [(i, f"abab abba baab aabb bbaa ab ba {i % 7}") for i in range(40)],
+        "doc_id long, text string",
+    )
+
+    def _persisted_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    before = _persisted_ids()
+    with pin_strategy("persist"):
+        table = pin(bpe.word_freq_table(docs))
+        # 14 word types over several partitions: bpe_train coalesces
+        assert table.rdd.getNumPartitions() > 1
+        unpin(table)
+        _, words = bpe.bpe_train(docs, n_merges=6, checkpoint_every=2)
+        assert words.count() == 14
+        assert len(_persisted_ids() - before) == 1
+    spark.catalog.clearCache()
+
+
 def test_semantic_dedup_k_cap(spark):
     """k_cap semantics (VERDICT r11 task 4): a non-binding cap changes
     nothing (byte-identical to k_cap=None), and a binding cap is
