@@ -32,6 +32,9 @@ _REVERIFY: set[str] = {
     "d_dedup_keep_best",
     "q_bfs_shortest_path",
     "s_ann_ivf_recall",
+    "q1_pricing_summary",
+    "q_sessionization",
+    "q_asof_join",
 }
 
 

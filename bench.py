@@ -18,7 +18,9 @@ directory outside the checkout, removed at exit.
 Method:
   1. page the input parquet files into the OS cache (untimed);
   2. run every entry once at the sibling ``sf0.001`` directory (untimed),
-     so each entry's per-JVM codegen compile is paid before timing;
+     so each entry's per-JVM codegen compile is paid before timing
+     (the probes, which read no input, run at ``WARM_ROW_SHARE`` of
+     their rows with the same plan shape);
   3. run ``REPS`` passes over all entries, each pass in a seeded
      shuffled order so no entry sits in the same wall-clock slot of
      every pass.  Every entry gets the same rep count.
@@ -37,6 +39,7 @@ stdout: ``metric``, ``value`` (sum of the medians in ``queries``),
 from __future__ import annotations
 
 import contextlib
+import functools
 import glob
 import hashlib
 import json
@@ -60,6 +63,10 @@ from perfbench.session import (
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 REPS = 3
 SHUFFLE_SEED = 16
+# The codegen warm pass runs the probes at this share of their rows.
+# Codegen follows plan shape (partition counts, the hash chain), not
+# size, so the small pass compiles what the timed probes run.
+WARM_ROW_SHARE = 0.01
 # The result is read from the last ~2000 chars of stdout.
 LINE_CAP = 1400
 
@@ -108,7 +115,7 @@ HEADLINE = (
 )
 
 
-def gen_probe(spark, _sf_dir):
+def gen_probe(spark, _sf_dir, row_share=1.0):
     """Raw generation throughput: 5M rows × 4 randgen columns via the
     pure-Catalyst fast path (the 100 TB generation shape)."""
     from pyspark.sql import functions as F
@@ -116,7 +123,7 @@ def gen_probe(spark, _sf_dir):
     from datafusion_randgen_spark.functions import exprs, seeded
 
     cores = spark.sparkContext.defaultParallelism
-    df = spark.range(0, 5_000_000, 1, cores).select(
+    df = spark.range(0, int(5_000_000 * row_share), 1, cores).select(
         exprs.int64_uniform_expr(F.lit(1), F.lit(1_000_000)).alias("a"),
         exprs.float64_normal_expr(F.lit(0.0), F.lit(1.0)).alias("b"),
         seeded.seeded_int64_uniform(F.col("id"), 1, 100, seed=1).alias("c"),
@@ -127,18 +134,19 @@ def gen_probe(spark, _sf_dir):
     )
 
 
-def gen_probe_pandas_udf(spark, _sf_dir):
+def gen_probe_pandas_udf(spark, _sf_dir, row_share=1.0):
     """Parity pandas-UDF path at 1M rows (Arrow round-trip cost)."""
     from datafusion_randgen_spark import add_udfs
 
     add_udfs(spark)
     return spark.sql(
         "SELECT count(*) AS n, min(x) AS lo, max(x) AS hi FROM "
-        "(SELECT randgen_int64_uniform(1, 1000000) AS x FROM range(0, 1000000))"
+        "(SELECT randgen_int64_uniform(1, 1000000) AS x "
+        f"FROM range(0, {int(1_000_000 * row_share)}))"
     )
 
 
-def cpu_scaling_probe(spark, _sf_dir):
+def cpu_scaling_probe(spark, _sf_dir, row_share=1.0):
     """Compute-bound core-scaling probe: a fixed amount of
     embarrassingly-parallel JVM codegen work — 64M rows × a 24-round
     xxhash64 chain, partitioned 4× the session's cores, reduced map-side
@@ -159,7 +167,7 @@ def cpu_scaling_probe(spark, _sf_dir):
         h = F.xxhash64(h, F.lit(i))
     cores = spark.sparkContext.defaultParallelism
     return (
-        spark.range(0, 64_000_000, 1, cores * 4)
+        spark.range(0, int(64_000_000 * row_share), 1, cores * 4)
         .groupBy(F.pmod(h, F.lit(64)).alias("g"))
         .agg(F.count("*").alias("n"))
     )
@@ -181,6 +189,15 @@ def entry_fn(name: str):
     if name == "flagship_randgen_graft":
         return cat.flagship
     return cat.QUERIES[name]
+
+
+def warm_fn(name: str):
+    """The codegen warm pass's builder of a headline entry: a probe at
+    ``WARM_ROW_SHARE`` of its rows, any other entry as timed (its size
+    comes from the warm pass's sf0.001 input)."""
+    if name in PROBES:
+        return functools.partial(PROBES[name], row_share=WARM_ROW_SHARE)
+    return entry_fn(name)
 
 
 def parse_cpus(value: str | None) -> int:
@@ -376,9 +393,9 @@ def main() -> int:
         if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != \
                 os.path.abspath(sf_dir):
             t_warm = time.perf_counter()
-            for name, fn in fns.items():
+            for name in HEADLINE:
                 try:
-                    materialize(fn(spark, warm_dir))
+                    materialize(warm_fn(name)(spark, warm_dir))
                 except Exception as exc:  # the timed pass reports it
                     print(f"# warm pass {name} raised: {exc!r}",
                           file=sys.stderr)

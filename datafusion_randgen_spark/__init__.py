@@ -31,9 +31,14 @@ Design notes (Spark-first, not a port):
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import SparkSession
 
 __version__ = "0.1.0"
+
+# Sessions whose function registry already holds the randgen UDFs.
+_REGISTERED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def add_udfs(spark: SparkSession) -> None:
@@ -41,7 +46,14 @@ def add_udfs(spark: SparkSession) -> None:
 
     Mirrors the reference entry point ``add_udfs(&mut SessionContext)``
     (``src/lib.rs:8-10``): pure catalog mutation, no execution.
+
+    Idempotent per session: the first call on a ``SparkSession``
+    registers, later calls on it return at once.  Each session has its
+    own registry, so a new one (``spark.newSession()`` included)
+    registers on its first call.
     """
+    if spark in _REGISTERED:
+        return
     from datafusion_randgen_spark.functions.exprs import register_sql_fastpaths
     from datafusion_randgen_spark.functions.randgen import register_parity_udfs
     from datafusion_randgen_spark.functions.udaf import register_udafs
@@ -53,6 +65,7 @@ def add_udfs(spark: SparkSession) -> None:
     register_udtfs(spark)
     register_udafs(spark)
     register_datasources(spark)
+    _REGISTERED.add(spark)
 
 
 __all__ = ["add_udfs", "__version__"]

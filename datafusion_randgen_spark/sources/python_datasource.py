@@ -185,8 +185,20 @@ def register_datasources(spark) -> None:
     # scan of such a reader while this conf is off (rather than
     # ignoring the hook), so enabling it here is part of registration
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(RandgenDataSource)
-    spark.dataSource.register(PyParquetSink)
+    # Spark refuses a name that the ACTIVE session already resolves, so
+    # a session from ``newSession()`` could not register the names its
+    # parent holds; register with ``spark`` active, then restore.
+    sessions = spark._jvm.SparkSession
+    active = sessions.getActiveSession()
+    sessions.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(RandgenDataSource)
+        spark.dataSource.register(PyParquetSink)
+    finally:
+        if active.isDefined():
+            sessions.setActiveSession(active.get())
+        else:
+            sessions.clearActiveSession()
 
 
 class RandgenStreamReader(DataSourceStreamReader):

@@ -8,22 +8,34 @@ keeps token hashing JVM-side (``transform(..., xxhash64)``) so its
 fingerprints are value-identical — only the 64-lane vote accumulation
 moves to a vectorized kernel across the Arrow boundary.
 
+The session is bench.py's: local[<host cores>], the heap a share of
+available memory, and its work directory in the system temp dir,
+removed at exit.
+
 Run:  python scripts/measure_simhash_kernels.py
 """
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if HERE not in sys.path:
+    sys.path.insert(0, HERE)
+if HERE not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
+    os.environ["PYTHONPATH"] = (
+        HERE + os.pathsep + os.environ.get("PYTHONPATH", "")
+    ).rstrip(os.pathsep)
 
+import bench  # noqa: E402
 from datafusion_randgen_spark.operators import dedup  # noqa: E402
 
 N_DOCS = 200_000
@@ -101,15 +113,11 @@ def timeit(fn, docs):
 
 
 def main():
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    with bench.bench_session(bench.host_cores()) as spark:
+        measure(spark)
+
+
+def measure(spark):
     for words in (8, 48):
         docs = make_docs(spark, words)
         n = docs.count()

@@ -1,9 +1,10 @@
 """Unit tests for bench.py: the core-count parse, the code hash, the
 seeded pass order, the warm-pass directory, the stdout line, failure
-counting and the plan of the core-scaling probe.
+counting, the plan of the core-scaling probe and the warm-pass probe
+sizes.
 
-Only the last two need Spark (the shared ``conftest`` session); bench.py
-imports nothing from pyspark at module level.
+Only the last three need Spark (the shared ``conftest`` session);
+bench.py imports nothing from pyspark at module level.
 """
 
 from __future__ import annotations
@@ -177,3 +178,27 @@ def test_cpu_scaling_probe_groups_on_hash_chain(spark):
     assert key, plan
     assert agg.startswith(f"Aggregate [{key.group(2)}]")
     assert key.group(1).count("xxhash64(") == 24
+
+
+@pytest.mark.parametrize("name", sorted(bench.PROBES))
+def test_warm_pass_probe_keeps_plan_shape_at_one_percent_rows(spark, name):
+    """The warm pass runs each probe at WARM_ROW_SHARE of its rows with
+    the plan the timed pass compiles: same partition counts, same
+    operators and expressions (so the same 24-round hash chain); only
+    the Range row count differs.  The timed builder keeps its rows."""
+    def plan(fn):
+        return fn(spark, None)._jdf.queryExecution().optimizedPlan().toString()
+
+    full, warm = plan(bench.entry_fn(name)), plan(bench.warm_fn(name))
+    rng = re.compile(r"Range \(0, (\d+), step=1(, splits=Some\(\d+\))?\)")
+    (full_rows, full_splits), = rng.findall(full)
+    (warm_rows, warm_splits), = rng.findall(warm)
+    assert int(full_rows) == {
+        "gen_expr_5m_rows": 5_000_000,
+        "gen_pandas_udf_1m_rows": 1_000_000,
+        "cpu_scaling_probe": 64_000_000,
+    }[name]
+    assert int(warm_rows) == int(int(full_rows) * bench.WARM_ROW_SHARE) <= int(full_rows) // 100
+    assert warm_splits == full_splits
+    # expression ids and rand() seeds differ between builds
+    assert re.sub(r"-?\d+", "N", warm) == re.sub(r"-?\d+", "N", full)
