@@ -35,6 +35,15 @@ _REVERIFY: set[str] = {
     "q1_pricing_summary",
     "q_sessionization",
     "q_asof_join",
+    "r_int64_uniform_props",
+    "r_int64_uniform_column_bounds",
+    "r_null_propagation_matrix",
+    "r_inclusive_endpoints",
+    "r_int64_uniform_moments",
+    "r_expr_fastpath_props",
+    "r_date_uniform_props",
+    "d_exact_dedup",
+    "d_connected_components",
 }
 
 

@@ -135,13 +135,15 @@ def gen_probe(spark, _sf_dir, row_share=1.0):
 
 
 def gen_probe_pandas_udf(spark, _sf_dir, row_share=1.0):
-    """Parity pandas-UDF path at 1M rows (Arrow round-trip cost)."""
+    """pandas-UDF path at 1M rows: ``randgen_float64_uniform``, so the
+    entry times the Arrow round trip to the Python worker
+    (``randgen_int64_uniform`` runs in whole-stage codegen)."""
     from datafusion_randgen_spark import add_udfs
 
     add_udfs(spark)
     return spark.sql(
         "SELECT count(*) AS n, min(x) AS lo, max(x) AS hi FROM "
-        "(SELECT randgen_int64_uniform(1, 1000000) AS x "
+        "(SELECT randgen_float64_uniform(0, 1) AS x "
         f"FROM range(0, {int(1_000_000 * row_share)}))"
     )
 

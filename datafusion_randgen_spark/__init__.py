@@ -13,14 +13,19 @@ similarity search, text analysis, multimodal columns).
 
 Design notes (Spark-first, not a port):
 
-* Generators come in two flavors per distribution:
+* The reference function ``randgen_int64_uniform`` is a SQL function
+  over ``rand()`` (``functions.exprs.INT64_UNIFORM_SQL``) with the
+  reference's semantics — exact inclusive bounds, SQL NULL propagation,
+  error on ``min > max`` — so ``spark.sql("SELECT
+  randgen_int64_uniform(1, 10) ...")`` works verbatim and runs inside
+  whole-stage codegen, with no Python worker, like the reference's
+  in-engine kernels (``int64_uniform.rs:106-153``).  Each analysed plan
+  fixes its ``rand`` seeds: collecting one DataFrame twice repeats its
+  draws; a new query draws afresh.
+* The rest of the grid comes in two flavors per distribution:
 
-  - **parity UDFs** (``functions.randgen``): Arrow-vectorized pandas UDFs
-    with the reference's exact semantics — inclusive bounds, SQL NULL
-    propagation, error on ``min > max`` — registered under the reference
-    names so ``spark.sql("SELECT randgen_int64_uniform(1, 10) ...")``
-    works verbatim.  This is the moral equivalent of the reference's
-    per-batch Arrow kernels (``int64_uniform.rs:106-153``).
+  - **pandas UDFs** (``functions.randgen``): Arrow-vectorized, NumPy
+    samplers, registered under ``randgen_<type>_<distribution>`` names.
   - **expression fast paths** (``functions.exprs``): pure Catalyst
     ``Column`` builders (``F.rand()`` based) that stay inside
     whole-stage codegen — the 100 TB path, no Python worker round-trip.

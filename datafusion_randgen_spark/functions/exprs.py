@@ -5,15 +5,28 @@ Same distributions as ``functions.randgen`` but built from
 JVM-side inside whole-stage codegen: no Arrow transfer, no Python worker.
 This is the 100 TB path — per-row cost is a few codegen'd arithmetic ops.
 
-Trade-offs vs the parity pandas UDFs (documented, deliberate):
+The reference's own function, ``randgen_int64_uniform(min, max)``
+(reference ``src/randgen/int64_uniform.rs:17-153``), lives here as the
+SQL function body ``INT64_UNIFORM_SQL``; ``int64_uniform_expr`` is the
+same expression spelled as a ``Column``.  Semantics:
 
-* ``rand()`` has 53 bits of mantissa, so ``int64_uniform_expr`` over a
-  span wider than 2^53 quantizes (the pandas UDF draws exact 64-bit
-  integers).  For every realistic generation span this is irrelevant.
-* ``min > max`` yields a runtime error via ``raise_error`` (ANSI-style),
-  matching the reference's panic semantics
-  (``/root/reference/src/randgen/int64_uniform.rs:99``).
-* NULL propagation is native: arithmetic over NULL is NULL.
+* **Inclusive, exact bounds** for every ``min <= max`` in BIGINT, ANSI
+  mode on or off (``Uniform::new_inclusive``, ``int64_uniform.rs:99``).
+  Each value's probability is within a relative 2^-31 of 1/n for spans
+  n = max - min + 1 <= 2^32, and 2^-42 above (see ``INT64_UNIFORM_SQL``).
+* **NULL in either bound → NULL out**, per row (``:222-275``).
+* **``min > max`` raises** ``invalid range`` via ``raise_error`` (the
+  reference panics).
+* **Volatile**: ``rand()`` makes the expression nondeterministic, so
+  Catalyst will not constant-fold it, collapse it into a consumer that
+  reads it twice, or push it through filters/joins.  Each analysed
+  plan fixes its ``rand`` seeds, as with Spark's own ``rand()``:
+  collecting the same DataFrame again repeats its draws, while a new
+  query (a new ``spark.sql`` call or DataFrame) draws afresh.
+
+``min > max`` in the other builders also yields a runtime error via
+``raise_error``; NULL propagation is native (arithmetic over NULL is
+NULL).
 
 Each builder also registers as a SQL UDF (``CREATE TEMPORARY FUNCTION …
 RETURNS … RETURN <expr>``) so the fast path is reachable from plain SQL;
@@ -33,19 +46,45 @@ def _c(x) -> Column:
     return x if isinstance(x, Column) else F.lit(x)
 
 
-def int64_uniform_expr(lo: ColumnOrName, hi: ColumnOrName) -> Column:
-    """Uniform int64 in [lo, hi] inclusive, JVM-side.
+# Uniform BIGINT in [lo, hi]: lo + pmod(r, n), n = hi - lo + 1, with r
+# exactly uniform on [0, 2^b).  rand() is a uniform double on the 2^-53
+# grid, so floor(rand() * 2^k) is exactly uniform on [0, 2^k) for
+# k <= 53, and each value's probability is within a relative n / 2^b
+# of 1/n.  Spans with n <= 2^32 take r from two draws (31 + 32 bits, a
+# BIGINT below 2^63): bias <= 2^-31.  Wider spans, up to
+# [i64::MIN, i64::MAX], take r from two 53-bit draws in DECIMAL:
+# bias <= 2^-42.  try_subtract sends a span whose width overflows BIGINT
+# to the DECIMAL branch under ANSI on or off.
+_R63_SQL = "floor(rand() * 2147483648D) * 4294967296 + floor(rand() * 4294967296D)"
+_R106_SQL = (
+    "CAST(floor(rand() * 9007199254740992D) AS DECIMAL(16,0)) * 9007199254740992 "
+    "+ CAST(floor(rand() * 9007199254740992D) AS DECIMAL(16,0))"
+)
+INT64_UNIFORM_SQL = (
+    "CASE WHEN lo IS NULL OR hi IS NULL THEN CAST(NULL AS BIGINT) "
+    "WHEN lo > hi THEN CAST(raise_error(concat("
+    "'randgen_int64_uniform: invalid range min=', lo, ' > max=', hi)) AS BIGINT) "
+    f"WHEN try_subtract(hi, lo) < 4294967296 THEN lo + pmod({_R63_SQL}, hi - lo + 1) "
+    f"ELSE CAST(lo + pmod({_R106_SQL}, CAST(hi AS DECIMAL(20,0)) - lo + 1) AS BIGINT) END"
+)
 
-    ``floor(rand() * (span)) + lo`` with span = hi - lo + 1; NULL in
-    either bound propagates; lo > hi raises at runtime.
-    """
-    lo_c, hi_c = _c(lo), _c(hi)
-    span = hi_c.cast("double") - lo_c.cast("double") + F.lit(1.0)
-    draw = F.floor(F.rand() * span).cast("long") + lo_c.cast("long")
+
+def int64_uniform_expr(lo: ColumnOrName, hi: ColumnOrName) -> Column:
+    """Uniform int64 in [lo, hi] inclusive, JVM-side: ``INT64_UNIFORM_SQL``
+    as a Column, so it needs no registered function.  NULL in either
+    bound propagates; lo > hi raises ``invalid range`` at runtime."""
+    lo_c, hi_c = _c(lo).cast("long"), _c(hi).cast("long")
+    invalid = F.concat(
+        F.lit("randgen_int64_uniform: invalid range min="), lo_c, F.lit(" > max="), hi_c
+    )
+    small = F.try_subtract(hi_c, lo_c) < F.lit(2**32)
     return (
         F.when(lo_c.isNull() | hi_c.isNull(), F.lit(None).cast("long"))
-        .when(lo_c > hi_c, F.raise_error(F.lit("int64_uniform_expr: min > max")).cast("long"))
-        .otherwise(draw)
+        .when(lo_c > hi_c, F.raise_error(invalid).cast("long"))
+        .when(small, lo_c + F.pmod(F.expr(_R63_SQL), hi_c - lo_c + F.lit(1)))
+        .otherwise(
+            (lo_c + F.pmod(F.expr(_R106_SQL), hi_c.cast("decimal(20,0)") - lo_c + F.lit(1))).cast("long")
+        )
     )
 
 
@@ -180,13 +219,11 @@ def element_from_weighted_expr(values: list, weights: list[float]) -> Column:
     return F.element_at(F.array(*[F.lit(v) for v in values]), idx + 1)
 
 
+_INT64_UNIFORM_FN = f"(lo BIGINT, hi BIGINT) RETURNS BIGINT RETURN {INT64_UNIFORM_SQL}"
+
 _SQL_FASTPATHS = {
-    "randgen_int64_uniform_expr": (
-        "(lo BIGINT, hi BIGINT) RETURNS BIGINT RETURN "
-        "CASE WHEN lo IS NULL OR hi IS NULL THEN CAST(NULL AS BIGINT) "
-        "WHEN lo > hi THEN CAST(raise_error('randgen_int64_uniform_expr: min > max') AS BIGINT) "
-        "ELSE CAST(floor(rand() * (CAST(hi AS DOUBLE) - CAST(lo AS DOUBLE) + 1.0d)) AS BIGINT) + lo END"
-    ),
+    "randgen_int64_uniform": _INT64_UNIFORM_FN,
+    "randgen_int64_uniform_expr": _INT64_UNIFORM_FN,
     "randgen_float64_uniform_expr": (
         "(lo DOUBLE, hi DOUBLE) RETURNS DOUBLE RETURN "
         "CASE WHEN lo IS NULL OR hi IS NULL THEN CAST(NULL AS DOUBLE) "

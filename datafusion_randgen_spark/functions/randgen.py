@@ -1,21 +1,20 @@
-"""Parity randgen UDF family — Arrow-vectorized pandas UDFs.
+"""Randgen distribution grid — Arrow-vectorized pandas UDFs.
 
-Reproduces the reference's single function ``randgen_int64_uniform``
-(``/root/reference/src/randgen/int64_uniform.rs:17-153``) and extends it
-to the ``<type>_<distribution>`` grid its module layout implies
-(``src/randgen/mod.rs:1``, empty ``macros.rs`` placeholder).
+The reference's single function, ``randgen_int64_uniform`` (reference
+``src/randgen/int64_uniform.rs:17-153``), is not here: it is a SQL
+function over ``rand()`` (``functions.exprs.INT64_UNIFORM_SQL``) that
+Catalyst inlines into whole-stage codegen, so it never crosses the
+Python-worker boundary.  This module extends it to the
+``<type>_<distribution>`` grid the reference's module layout implies
+(``src/randgen/mod.rs:1``, empty ``macros.rs`` placeholder), with the
+same semantics:
 
-Semantics pinned to the reference:
-
-* **Inclusive bounds** — ``Uniform::new_inclusive(min, max)``
-  (``int64_uniform.rs:99,117,134,148``).  NumPy: ``endpoint=True`` so
-  ``max = i64::MAX`` cannot overflow.
-* **NULL propagation** — NULL in either bound → NULL out, per row
+* **NULL propagation** — NULL in a parameter → NULL out, per row
   (``int64_uniform.rs:96-103,110-111,127-128``; tests ``:222-275``).
   Unlike the reference's array kernels we never evaluate the sampler on
   null slots (the reference would panic on a null-min row with
   ``max < 0`` — an implementation wart SURVEY.md §2.3 says not to copy).
-* **``min > max`` is an error** — the reference panics
+* **Invalid parameters are an error** — the reference panics
   (``Uniform::new_inclusive(..).unwrap()``); we raise ``ValueError``
   with a clear message, checked per valid row.
 * **Volatile** — ``Volatility::Volatile`` (``int64_uniform.rs:23``)
@@ -23,10 +22,9 @@ Semantics pinned to the reference:
   CSE, or push the call through filters/joins.
 * **Fresh value per row even for literal args** — the reference's
   const×const arm returns a single ``Scalar`` broadcast over the batch
-  (``int64_uniform.rs:68-75``), so ``SELECT randgen_int64_uniform(1,10)
-  FROM generate_series(1,100)`` yields 100 *identical* values there.
-  SURVEY.md §4 flags this as a quirk not to replicate; here literals
-  arrive as full-length Series, so every row is an independent draw.
+  (``int64_uniform.rs:68-75``); SURVEY.md §4 flags this as a quirk not
+  to replicate; here literals arrive as full-length Series, so every row
+  is an independent draw.
 
 Scale note: each UDF is one NumPy call per Arrow batch — the same
 per-batch vectorization as the reference's ``compute::unary`` kernels.
@@ -46,9 +44,6 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-_I64_MIN = -(2**63)
-_I64_MAX = 2**63 - 1
 
 # One generator per Python worker process; os-entropy seeded => independent
 # streams per worker without coordination.  Volatile semantics mean callers
@@ -73,10 +68,9 @@ def _int64_parts(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     if pd.api.types.is_float_dtype(s.dtype):
         # Legacy Arrow -> pandas path turned nullable int64 into float64
         # with NaN.  PySpark 4.1 delivers pd.Int64Dtype instead (branch
-        # below — exact for the full i64 range, incl. i64::MAX with
-        # nulls present; pinned by test_nullable_extreme_bounds_exact).
-        # If a float64 Series DOES arrive here, |bounds| > 2^53 have
-        # already lost precision upstream — nothing to recover in-kernel.
+        # below — exact for the full i64 range).  If a float64 Series
+        # DOES arrive here, |values| > 2^53 have already lost precision
+        # upstream — nothing to recover in-kernel.
         mask = np.isnan(s.to_numpy(dtype="float64", copy=False))
         vals = s.fillna(0).to_numpy(dtype="float64").astype(np.int64)
     elif isinstance(s.dtype, pd.Int64Dtype):
@@ -101,32 +95,6 @@ def _masked_int_result(vals: np.ndarray, mask: np.ndarray) -> pd.Series:
     if mask.any():
         return pd.Series(vals, dtype="Int64").mask(pd.Series(mask))
     return pd.Series(vals)
-
-
-# ---------------------------------------------------------------------------
-# int64_uniform — the reference function (int64_uniform.rs:17-153)
-# ---------------------------------------------------------------------------
-
-def _int64_uniform_kernel(lo: pd.Series, hi: pd.Series) -> pd.Series:
-    lo_v, lo_m = _int64_parts(lo)
-    hi_v, hi_m = _int64_parts(hi)
-    mask = lo_m | hi_m
-    valid = ~mask
-    if np.any(valid & (lo_v > hi_v)):
-        bad_lo = lo_v[valid & (lo_v > hi_v)][0]
-        bad_hi = hi_v[valid & (lo_v > hi_v)][0]
-        raise ValueError(
-            f"randgen_int64_uniform: invalid range min={bad_lo} > max={bad_hi}"
-        )
-    # Null slots were filled with 0/0 — a valid degenerate range — so one
-    # vectorized draw covers the batch; endpoint=True keeps i64::MAX safe.
-    lo_s = np.where(mask, 0, lo_v)
-    hi_s = np.where(mask, 0, hi_v)
-    out = _rng().integers(lo_s, hi_s, endpoint=True, dtype=np.int64)
-    return _masked_int_result(out, mask)
-
-
-randgen_int64_uniform = F.pandas_udf(_int64_uniform_kernel, T.LongType()).asNondeterministic()
 
 
 # ---------------------------------------------------------------------------
@@ -328,7 +296,6 @@ randgen_int64_geometric = F.pandas_udf(_int64_geometric_kernel, T.LongType()).as
 
 
 _PARITY_UDFS = {
-    "randgen_int64_uniform": randgen_int64_uniform,
     "randgen_float64_uniform": randgen_float64_uniform,
     "randgen_float64_normal": randgen_float64_normal,
     "randgen_int64_normal": randgen_int64_normal,
@@ -348,11 +315,10 @@ _PARITY_UDFS = {
 
 
 def register_parity_udfs(spark: SparkSession) -> None:
-    """Register the parity family into the session catalog.
-
-    Mirrors ``ctx.register_udf(ScalarUDF::from(Int64Uniform::new()))``
-    (reference ``src/lib.rs:9``); after this, every function is callable
-    from ``spark.sql`` by name.
+    """Register the pandas-UDF grid into the session catalog; after
+    this, every function is callable from ``spark.sql`` by name.
+    ``randgen_int64_uniform`` itself is registered by
+    ``exprs.register_sql_fastpaths``.
     """
     for name, udf in _PARITY_UDFS.items():
         spark.udf.register(name, udf)

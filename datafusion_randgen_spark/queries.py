@@ -1185,7 +1185,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan → filter (pushed to parquet) → hash agg
     (partial+final).  One shuffle, 4-6 grouped rows."""
     _prep(spark, sf_dir)
-    li = load_table(spark, sf_dir, "lineitem")
+    li = spark.table("lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -1988,7 +1988,7 @@ def d_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text; shuffles 32-byte digests, not
     document bodies (operators.dedup.exact_dedup)."""
     _prep(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     return dedup.exact_dedup(docs).select("doc_id", "group_size")
 
 
@@ -2184,7 +2184,7 @@ def d_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     below the threshold are excluded deterministically on BOTH sides by
     the exact-jaccard verify, so only the vanishing miss band remains."""
     _prep(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     return dedup.minhash_lsh_dedup_pairs(docs, threshold=0.8)
 
 
@@ -2914,7 +2914,7 @@ def d_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     window.  Multi-hop propagation is genuinely exercised (chains up to
     length 10 ⇒ up to 9 rounds)."""
     _prep(spark, sf_dir)
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
+    d = spark.table("documents").select("doc_id")
     x, y = d.alias("x"), d.alias("y")
     edges = x.join(
         y,
@@ -8092,7 +8092,7 @@ def t_bpe_merge_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_randgen_spark.operators import bpe
 
     _prep(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     merges, _ = bpe.bpe_train(docs, n_merges=_BPE_N_MERGES)
     return merges
 

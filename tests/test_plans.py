@@ -71,10 +71,35 @@ def test_pandas_udf_family_is_arrow_vectorized(spark):
     from datafusion_randgen_spark import add_udfs
 
     add_udfs(spark)
-    df = spark.sql("SELECT randgen_int64_uniform(1, 10) AS x FROM range(1, 101)")
+    df = spark.sql("SELECT randgen_float64_uniform(0, 1) AS x FROM range(1, 101)")
     plan = plans.physical_plan(df)
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan
+
+
+@pytest.mark.parametrize("bounds", ["literals", "columns", "nullable_column"])
+def test_int64_uniform_builder_plan_matches_sql_function(spark, bounds):
+    """``exprs.int64_uniform_expr`` and the SQL function
+    ``randgen_int64_uniform`` spell one formula: their optimized plans
+    are equal up to ``rand`` seeds and expression ids."""
+    import re
+
+    from datafusion_randgen_spark.functions import exprs
+
+    lo_col = F.col("id")
+    if bounds == "nullable_column":
+        lo_col = F.when(F.col("id") % 7 > 0, F.col("id"))
+    base = spark.range(100).select(lo_col.alias("lo"), (F.col("id") * 3).alias("hi"))
+    lo, hi = (F.lit(1), F.lit(10)) if bounds == "literals" else (F.col("lo"), F.col("hi"))
+
+    def optimized(col):
+        plan = base.select(col.alias("x"))._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", re.sub(r"rand\(-?\d+\)", "rand()", plan))
+
+    via_sql = optimized(F.call_function("randgen_int64_uniform", lo, hi))
+    assert optimized(exprs.int64_uniform_expr(lo, hi)) == via_sql
+    # literal bounds fold to the 63-bit branch; columns keep both branches
+    assert via_sql.count("rand()") == (2 if bounds == "literals" else 4)
 
 
 def test_partitioned_write_prunes_directories(spark, tmp_path):

@@ -146,8 +146,50 @@ def test_expr_sql_fastpaths_registered(spark):
     assert all(
         x is None for x in col0(spark, "SELECT randgen_int64_uniform_expr(1, NULL) FROM range(1, 101)")
     )
-    with pytest.raises(Exception, match="min > max"):
+    with pytest.raises(Exception, match="invalid range"):
         spark.sql("SELECT randgen_int64_uniform_expr(10, 1) FROM range(1, 11)").collect()
+
+
+I64_MIN, I64_MAX = -(2**63), 2**63 - 1
+
+
+def _expr_draws(spark, spelling, lo, hi, n):
+    if spelling == "sql":
+        return spark.sql(f"SELECT randgen_int64_uniform_expr({lo}, {hi}) AS x FROM range({n})")
+    return spark.range(n).select(exprs.int64_uniform_expr(F.lit(lo), F.lit(hi)).alias("x"))
+
+
+@pytest.mark.parametrize("spelling", ["sql", "column"])
+def test_expr_int64_uniform_reaches_upper_bound_at_i64_max(spark, spelling):
+    """A double-based span (hi - lo + 1 in float64) never drew i64::MAX."""
+    xs = {r.x for r in _expr_draws(spark, spelling, I64_MAX - 1, I64_MAX, 2000).collect()}
+    assert xs == {I64_MAX - 1, I64_MAX}
+
+
+@pytest.mark.parametrize("spelling", ["sql", "column"])
+def test_expr_int64_uniform_full_range_exact(spark, spelling):
+    """Over [i64::MIN, i64::MAX] a 53-bit double draw lands on multiples
+    of 2048, and its saturated cast adds -1."""
+    r = (
+        _expr_draws(spark, spelling, I64_MIN, I64_MAX, 20000)
+        .selectExpr(
+            "count(DISTINCT pmod(x, 2048)) AS low_bits",
+            "count_if(x = -1) AS minus_one",
+            "count_if(x < 0) AS neg",
+        )
+        .collect()[0]
+    )
+    assert r.low_bits > 1900 and r.minus_one == 0 and 9000 < r.neg < 11000
+
+
+def test_expr_timestamp_uniform_reaches_both_ends(spark):
+    """timestamp_uniform_expr draws through int64_uniform_expr on micros."""
+    ts = spark.range(2000).select(
+        exprs.timestamp_uniform_expr(
+            F.lit("2024-01-01 00:00:00"), F.lit("2024-01-01 00:00:00.000001")
+        ).alias("t")
+    )
+    assert len({r.t for r in ts.collect()}) == 2
 
 
 def test_expr_normal_and_bernoulli(spark):

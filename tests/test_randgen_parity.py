@@ -129,7 +129,9 @@ def test_min_gt_max_raises(spark):
 
 
 def test_nondeterministic_flag(spark):
-    """Forgetting .asNondeterministic() silently breaks semantics (SURVEY §4)."""
+    """Forgetting .asNondeterministic() silently breaks semantics (SURVEY §4).
+    ``randgen_int64_uniform`` is a SQL function, volatile through its
+    ``rand()`` calls: see ``test_int64_uniform_not_reevaluated_after_collapse``."""
     from datafusion_randgen_spark.functions import randgen as rg
 
     for name, udf in rg._PARITY_UDFS.items():
@@ -147,9 +149,8 @@ def test_statistical_mean(spark):
 
 
 def test_nullable_extreme_bounds_exact(spark):
-    """A NULLABLE bound column at i64::MAX must not round-trip through
-    float64 (2^53 precision cliff): the Int64Dtype kernel branch keeps
-    the full i64 range exact even when the batch contains nulls."""
+    """A NULLABLE bound column at i64::MAX stays exact (no float64
+    round trip, no 2^53 precision cliff) when the column holds nulls."""
     rows = spark.sql(
         """
         SELECT randgen_int64_uniform(9223372036854775806, hi) AS x
@@ -159,3 +160,117 @@ def test_nullable_extreme_bounds_exact(spark):
     ).collect()
     assert rows[0].x in (9223372036854775806, 9223372036854775807)
     assert rows[1].x is None
+
+
+# --- randgen_int64_uniform as a whole-stage-codegen SQL function ---------
+
+I64_MIN, I64_MAX = -(2**63), 2**63 - 1
+
+
+def test_int64_uniform_runs_without_python_worker(spark):
+    from datafusion_randgen_spark import plans
+
+    df = spark.sql(
+        "SELECT randgen_int64_uniform(1, 10) AS a, randgen_int64_uniform(-id, id) AS b "
+        "FROM range(1, 101)"
+    )
+    assert plans.python_eval_nodes(df) == 0
+    assert plans.physical_plan(df).startswith("*(1) Project")  # inside whole-stage codegen
+
+
+def test_int64_uniform_not_reevaluated_after_collapse(spark):
+    """A nondeterministic producer read twice must not be inlined into its
+    consumer (CollapseProject), or ``x`` and its copy would be two draws."""
+    rows = spark.sql(
+        "SELECT x, x AS y FROM (SELECT randgen_int64_uniform(1, 1000000) AS x FROM range(1, 10001))"
+    ).collect()
+    assert all(r.x == r.y for r in rows)
+    assert len({r.x for r in rows}) > 1
+
+
+def test_int64_uniform_call_sites_draw_independently(spark):
+    rows = spark.sql(
+        "SELECT randgen_int64_uniform(1, 1000000) AS a, randgen_int64_uniform(1, 1000000) AS b "
+        "FROM range(1, 1001)"
+    ).collect()
+    assert sum(r.a != r.b for r in rows) > 990
+
+
+@pytest.mark.parametrize(
+    "lo, hi",
+    [
+        (0, 2**32 - 2),  # n = 2^32 - 1
+        (I64_MIN, I64_MIN + 2**32 - 1),  # n = 2^32, the last 63-bit span
+        (I64_MAX - 2**32, I64_MAX),  # n = 2^32 + 1, the first DECIMAL span
+    ],
+)
+def test_int64_uniform_branch_edge_spans(spark, lo, hi):
+    n = hi - lo + 1
+    r = spark.sql(
+        f"""
+        SELECT count_if(x < {lo} OR x > {hi}) AS out, min(x) AS mn, max(x) AS mx,
+               count(DISTINCT x) AS nd, count(DISTINCT pmod(x, 2048)) AS low_bits
+        FROM (SELECT randgen_int64_uniform({lo}, {hi}) AS x FROM range(20000))
+        """
+    ).collect()[0]
+    assert r.out == 0
+    # P(no draw in the bottom or top 1%) = 0.99^20000 ~ e^-201
+    assert r.mn < lo + n // 100 and r.mx > hi - n // 100
+    assert r.nd > 19900 and r.low_bits > 1900
+
+
+def test_int64_uniform_chi_square(spark):
+    counts = dict(
+        spark.sql(
+            "SELECT x, count(*) FROM (SELECT randgen_int64_uniform(1, 10) AS x FROM range(100000)) "
+            "GROUP BY x"
+        ).collect()
+    )
+    assert set(counts) == set(range(1, 11))
+    chi2 = sum((c - 10000) ** 2 / 10000 for c in counts.values())
+    assert chi2 < 45.0  # chi-square, 9 df: P(> 45) ~ 1e-6
+
+
+@pytest.fixture(params=["true", "false"])
+def ansi(spark, request):
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, request.param)
+    yield request.param
+    if prev is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize(
+    "lo, hi, expected",
+    [
+        (I64_MIN, I64_MIN, {I64_MIN}),
+        (I64_MAX, I64_MAX, {I64_MAX}),
+        (I64_MAX - 1, I64_MAX, {I64_MAX - 1, I64_MAX}),
+        (I64_MIN, I64_MIN + 1, {I64_MIN, I64_MIN + 1}),
+    ],
+)
+def test_int64_uniform_extreme_bounds_exact(spark, ansi, lo, hi, expected):
+    for bounds in (f"{lo}, {hi}", "lo, hi"):
+        xs = {
+            r.x
+            for r in spark.sql(
+                f"SELECT randgen_int64_uniform({bounds}) AS x "
+                f"FROM (SELECT CAST({lo} AS BIGINT) AS lo, CAST({hi} AS BIGINT) AS hi, id FROM range(2000))"
+            ).collect()
+        }
+        assert xs == expected, (ansi, bounds)
+
+
+def test_int64_uniform_full_range_not_quantized(spark, ansi):
+    r = spark.sql(
+        f"""
+        SELECT count(DISTINCT x) AS nd, count(DISTINCT pmod(x, 2048)) AS low_bits,
+               count_if(x < 0) AS neg, count_if(x = -1) AS minus_one
+        FROM (SELECT randgen_int64_uniform({I64_MIN}, {I64_MAX}) AS x FROM range(20000))
+        """
+    ).collect()[0]
+    assert r.nd > 19990 and r.low_bits > 1900
+    assert 9000 < r.neg < 11000 and r.minus_one == 0
