@@ -8080,11 +8080,10 @@ def t_bpe_merge_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is the trained merge table a tokenizer consumes.
 
     Scale design: the corpus is touched ONCE (normalize + token
-    explode into a map-side-combined word-type count); all 20
-    iterations run on the vocabulary-sized symbolized word table —
-    per iteration one combinable pair-count aggregate, a 1-row argmax
-    collect (driver state = the merge table itself), and a row-local
-    Catalyst array fold, ``localCheckpoint``ed so plans don't nest.
+    explode into a map-side-combined word-type count, collected to the
+    driver — 31 word types on the fixtures); the 20 merge rounds then
+    run on the driver over those types, so the entry costs the same
+    Spark jobs at any merge count.
 
     The oracle replays the identical 20 steps (exact integer counts +
     byte-order tie-break ⇒ the sequence is a theorem, full-value
@@ -8116,12 +8115,14 @@ def t_bpe_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative effect on the whole table — a wrong greedy application
     that happened to preserve argmax order would still fail here.
 
-    Same plan shape as training (the stats ride the final vocab-sized
-    frame); the 1-row crossJoin is the documented scalar attach."""
+    Scale design: training is one word-type count plus the driver
+    merge loop; the stats then aggregate the returned word table, a
+    local relation of one row per word type.  The 1-row crossJoin is
+    the documented scalar attach."""
     from datafusion_randgen_spark.operators import bpe
 
     _prep(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     _, words = bpe.bpe_train(docs, n_merges=_BPE_N_MERGES)
     sym = words.select(F.explode("syms").alias("s")).agg(
         F.count_distinct("s").alias("n_symbols")
@@ -8161,23 +8162,24 @@ def _bpe_encode_oracle(n: int = _BPE_N_MERGES) -> str:
 @query("t_bpe_encode", oracle=_bpe_encode_oracle())
 def t_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLIED half of the tokenizer (VERDICT r8 task 3,
-    ``operators/bpe.py:147`` ``bpe_encode``): train 20 merges on the
+    ``operators/bpe.py`` ``bpe_encode``): train 20 merges on the
     ``doc_id % 5 != 0`` split, then encode the HELD-OUT fifth of the
     corpus with the learned merge list, exactly how a trained BPE
     tokenizer meets new text.  Output: the holdout's top-20 symbols by
     occurrence-weighted count — a wrong merge order or a non-greedy
     application changes the symbol inventory and fails the hash.
 
-    Scale design: training cost is unchanged (vocab-sized iterations);
-    encoding is a pure MAP stage — 20 chained row-local Catalyst array
-    folds over the holdout word table, no shuffle until the final
-    vocabulary-sized symbol count.  Oracle: trainer and encoder replay
-    share one fold spec string (``_bpe_fold_case``), so the two halves
-    of the tokenizer are pinned to the same greedy semantics."""
+    Scale design: training is one word-type count plus the driver
+    merge loop (``bpe_train``); encoding is a pure MAP stage — 20
+    chained row-local Catalyst array folds over the holdout word
+    table, no shuffle until the final vocabulary-sized symbol count.
+    Oracle: trainer and encoder replay share one fold spec string
+    (``_bpe_fold_case``), so the two halves of the tokenizer are
+    pinned to the same greedy semantics."""
     from datafusion_randgen_spark.operators import bpe
 
     _prep(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     merges, _ = bpe.bpe_train(
         docs.filter(F.col("doc_id") % 5 != 0), n_merges=_BPE_N_MERGES
     )

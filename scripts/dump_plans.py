@@ -66,7 +66,7 @@ DRIVER_LOOP_NOTE = {
     "q_pagerank_transitions": "iterations unrolled into one plan (operators/graph.pagerank)",
     "s_kmeans_embeddings": "per-iteration loop in operators/clustering.kmeans",
     "d_semantic_dedup": "kmeans loop inside operators/dedup.semantic_dedup",
-    "t_bpe_merge_vocab": "per-merge loop in operators/bpe.bpe_train",
+    "t_bpe_merge_vocab": "driver merge loop over one word-type collect (operators/bpe.bpe_train)",
 }
 
 

@@ -979,6 +979,21 @@ def test_bpe_apply_merge_rejects_non_alphabet_symbols(spark):
             bpe.apply_merge(words, "a", bad)
 
 
+def _duckdb_bpe_stats(con, n):
+    """(total_tokens, n_word_types, n_symbols) of the DuckDB replay's
+    word table after ``n`` merges (the t_bpe_vocab_stats end state)."""
+    from datafusion_randgen_spark.queries import _bpe_replay_ctes
+
+    return con.sql(
+        f"""WITH {_bpe_replay_ctes(n)},
+        flat AS (SELECT unnest(syms) AS s FROM w{n})
+        SELECT CAST(sum(cnt * len(syms)) AS BIGINT) AS total_tokens,
+               CAST(count(*) AS BIGINT) AS n_word_types,
+               (SELECT CAST(count(DISTINCT s) AS BIGINT) FROM flat) AS n_symbols
+        FROM w{n}"""
+    ).fetchone()
+
+
 def test_bpe_oracle_survives_vocabulary_exhaustion(spark):
     """Corpus exhausts after 1 merge but the oracle replays 5 steps:
     the LEFT-JOIN fallback must hold w{i} at the fixed point instead of
@@ -988,7 +1003,7 @@ def test_bpe_oracle_survives_vocabulary_exhaustion(spark):
     import pandas as pd
 
     from datafusion_randgen_spark.operators import bpe
-    from datafusion_randgen_spark.queries import _bpe_merge_oracle, _bpe_replay_ctes
+    from datafusion_randgen_spark.queries import _bpe_merge_oracle
 
     texts = ["ab ab", "ab"]
     docs = spark.createDataFrame(
@@ -1003,19 +1018,48 @@ def test_bpe_oracle_survives_vocabulary_exhaustion(spark):
     con.register("documents", pd.DataFrame({"text": texts}))
     oracle = [tuple(r) for r in con.sql(_bpe_merge_oracle(5)).fetchall()]
     assert oracle == got
-    stats = con.sql(
-        f"""WITH {_bpe_replay_ctes(5)},
-        flat AS (SELECT unnest(syms) AS s FROM w5)
-        SELECT CAST(sum(cnt * len(syms)) AS BIGINT) AS total_tokens,
-               CAST(count(*) AS BIGINT) AS n_word_types,
-               (SELECT CAST(count(DISTINCT s) AS BIGINT) FROM flat) AS n_symbols
-        FROM w5"""
-    ).fetchone()
-    assert stats == (3, 1, 1)
+    assert _duckdb_bpe_stats(con, 5) == (3, 1, 1)
     spark_total = words.agg(
         F.sum(F.col("cnt") * F.size("syms"))
     ).collect()[0][0]
     assert spark_total == 3
+
+
+def test_bpe_train_greedy_overlaps_match_duckdb_replay(spark):
+    """The trainer's own greedy application (not apply_merge's, which
+    only the encoder uses) on overlapping runs and count ties: 'aaaa'
+    and 'aaa' give 5 (a, a) pairs but fold to [aa, aa] and [aa, a],
+    and ranks 4-8 all tie at count 1.  Merge table, end-state word
+    table and its stats must equal the DuckDB replay."""
+    import duckdb
+    import pandas as pd
+
+    from datafusion_randgen_spark.operators import bpe
+    from datafusion_randgen_spark.queries import _bpe_merge_oracle, _bpe_replay_ctes
+
+    texts = ["aaaa aaa abab baba banana"]
+    docs = spark.createDataFrame([(0, texts[0])], "doc_id long, text string")
+    merges, words = bpe.bpe_train(docs, n_merges=8)
+    got = [tuple(r) for r in merges.orderBy("merge_rank").collect()]
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({"text": texts}))
+    assert got == [tuple(r) for r in con.sql(_bpe_merge_oracle(8)).fetchall()]
+    assert got[0] == (1, "a", "a", "aa", 5)
+    oracle_words = {
+        w: (cnt, list(syms))
+        for w, cnt, syms in con.sql(
+            f"WITH {_bpe_replay_ctes(8)} SELECT w, cnt, syms FROM w8"
+        ).fetchall()
+    }
+    assert {r.w: (r.cnt, list(r.syms)) for r in words.collect()} == oracle_words
+    sym = words.select(F.explode("syms").alias("s")).agg(
+        F.count_distinct("s")
+    )
+    stats = words.agg(
+        F.sum(F.col("cnt") * F.size("syms")), F.count("*")
+    ).crossJoin(sym)
+    assert tuple(stats.collect()[0]) == _duckdb_bpe_stats(con, 8)
 
 
 def test_bpe_encode_hand_computed_word(spark):
@@ -1167,7 +1211,7 @@ def test_iterative_pins_mode_invariant(spark):
     for mode in ("localCheckpoint", "persist"):
         before = _n_persisted()
         with pin_strategy(mode):
-            merges, words = bpe.bpe_train(docs, n_merges=6, checkpoint_every=2)
+            merges, words = bpe.bpe_train(docs, n_merges=6)
             results[mode] = (
                 [tuple(r) for r in merges.orderBy("merge_rank").collect()],
                 {tuple(r) for r in dedup.connected_components(edges).collect()},
@@ -1184,9 +1228,9 @@ def test_iterative_pins_mode_invariant(spark):
     assert results["persist"][0], "BPE learned no merges"
     # leftover persisted frames must be bounded by the RETURNED-frame
     # pins (per-iteration internal pins release via replaces/unpin):
-    # bpe words final, CC final labels + lazy probe pin, BFS last
-    # frontier+visited, SemDeDup tagged + kmeans last-stats — a leak
-    # of one frame PER ITERATION would blow well past this bound
+    # CC final labels + lazy probe pin, BFS last frontier+visited,
+    # SemDeDup tagged + kmeans last-stats — a leak of one frame PER
+    # ITERATION would blow well past this bound
     # (delta, not absolute: localCheckpointed RDDs from earlier tests
     # in the shared session also register as persistent)
     assert persist_delta <= 10, persist_delta
@@ -1243,34 +1287,40 @@ def test_bfs_terminal_pin_released_under_persist(spark, max_hops):
     assert got == expect
 
 
-def test_bpe_coalesced_word_table_pin_released_under_persist(spark):
-    """Under persist, bpe_train must leave exactly ONE pinned frame —
-    the latest in-loop pin, which the returned words read — also when
-    the word table is coalesced (target < parts).  The coalesced view
-    was never persisted, so releasing it instead of the pinned table
-    left the word-frequency pin in executor storage for the session."""
+def test_bpe_train_job_count_independent_of_n_merges(spark):
+    """bpe_train counts the corpus in Spark once and runs every merge
+    on the driver, so it starts the same Spark jobs at 2 merges as at
+    8.  It pins nothing, so neither pin strategy leaves a new
+    persisted RDD behind."""
     from datafusion_randgen_spark.operators import bpe
-    from datafusion_randgen_spark.pinning import pin, pin_strategy, unpin
+    from datafusion_randgen_spark.pinning import pin_strategy
 
     docs = spark.createDataFrame(
         [(i, f"abab abba baab aabb bbaa ab ba {i % 7}") for i in range(40)],
         "doc_id long, text string",
     )
+    sc = spark.sparkContext
 
     def _persisted_ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        jmap = sc._jsc.getPersistentRDDs()
         return {int(k) for k in jmap.keySet().toArray()}
 
-    before = _persisted_ids()
-    with pin_strategy("persist"):
-        table = pin(bpe.word_freq_table(docs))
-        # 14 word types over several partitions: bpe_train coalesces
-        assert table.rdd.getNumPartitions() > 1
-        unpin(table)
-        _, words = bpe.bpe_train(docs, n_merges=6, checkpoint_every=2)
-        assert words.count() == 14
-        assert len(_persisted_ids() - before) == 1
-    spark.catalog.clearCache()
+    for mode in ("localCheckpoint", "persist"):
+        jobs = {}
+        before = _persisted_ids()
+        with pin_strategy(mode):
+            for n in (2, 8):
+                group = f"bpe_train:{mode}:{n}"
+                sc.setJobGroup(group, "bpe_train job count")
+                try:
+                    merges, _ = bpe.bpe_train(docs, n_merges=n)
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setLocalProperty("spark.job.description", None)
+                jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+                assert merges.count() == n
+        assert 0 < jobs[2] == jobs[8], (mode, jobs)
+        assert _persisted_ids() - before == set(), mode
 
 
 def test_semantic_dedup_k_cap(spark):
